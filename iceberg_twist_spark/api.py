@@ -69,7 +69,8 @@ class Engine:
         merge_into/update_where/delete_where/delete_keys/
         delete_where_positional, time travel by id/ref/timestamp,
         read_incremental/read_changelog, schema and partition-spec
-        evolution, compaction (plain or sort-order), expiry, WAP,
+        evolution, compaction (plain, sort-order, or scoped to the
+        files pending deletes hit: apply_deletes), expiry, WAP,
         branches/tags. See sources/snapshots.SnapshotTable."""
         from iceberg_twist_spark.sources.snapshots import SnapshotTable
 
@@ -153,6 +154,62 @@ class Engine:
         cand = band_pairs(minhash_signatures(docs), n_bands=n_bands)
         return _verify_jaccard(cand, docs, tau)
 
+    # -- stored indexes ---------------------------------------------
+    # Per-row index state is SnapshotTables (sources/snapshots.py): the
+    # MinHash ``bands`` + ``arrays`` and the PQ ``codes`` + ``vectors``
+    # are unpartitioned tables under the index path; the IVF rows are
+    # one table AT the index path, partitioned by ``cluster``. State
+    # frozen at build time — banding ``meta``, PQ ``codebook``, IVF
+    # ``<path>_centroids`` — is plain parquet written once. The
+    # lifecycle verbs are the table's own: append is ``append``; remove
+    # is ``delete_keys`` (a merge-on-read equality delete — O(|keys|),
+    # honoured by every reader through one broadcast anti-join per
+    # table; takedown sets are tiny vs the corpus); compaction is
+    # ``rewrite_data_files`` (IVF: ``apply_deletes``, which rewrites
+    # only the cluster files holding removed vectors). Each commit
+    # lands at the table's atomic version-hint swap, so an interrupted
+    # compaction leaves the index as it was and ``remove_orphan_files``
+    # reclaims what it wrote. Compact per snapshot, delete between
+    # snapshots; a delete set outgrowing a broadcast is the signal the
+    # compaction is overdue.
+    _MINHASH_TABLES = ("bands", "arrays")
+    _PQ_TABLES = ("codes", "vectors")
+
+    @staticmethod
+    def index_table(spark: SparkSession, path: str, name: str | None = None):
+        """One per-row table of a stored index as a ``SnapshotTable`` —
+        ``bands``/``arrays`` of a MinHash index, ``codes``/``vectors``
+        of a PQ index, or (``name=None``) the rows of an IVF index —
+        with its history, time travel, tags and maintenance verbs."""
+        from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+        base = path.rstrip("/")
+        return SnapshotTable(spark, f"{base}/{name}" if name else base)
+
+    @staticmethod
+    def _normalize_keys(spark: SparkSession, keys, col: str) -> DataFrame:
+        """``keys`` as a 1-column DataFrame or an iterable of ids →
+        a single ``long`` column named ``col``."""
+        import pandas as pd
+
+        if isinstance(keys, DataFrame):
+            return keys.select(F.col(keys.columns[0]).cast("long").alias(col))
+        # pandas-backed: an Arrow local relation, cheaper to scan twice
+        # (one delete per index table) than a parallelized list
+        return spark.createDataFrame(
+            pd.DataFrame({col: pd.Series([int(k) for k in keys], dtype="int64")})
+        )
+
+    @staticmethod
+    def _compact(spark: SparkSession, base: str, names: Sequence[str]) -> str:
+        """``rewrite_data_files`` on each named index table with pending
+        deletes; a table without any is left as it is."""
+        for name in names:
+            t = Engine.index_table(spark, base, name)
+            if t._manifest(t.current_snapshot_id()).get("eq_deletes"):
+                t.rewrite_data_files()
+        return base
+
     @staticmethod
     def build_minhash_index(
         df: DataFrame, text_col: str, key_col: str, path: str, tau: float = 0.2
@@ -174,16 +231,17 @@ class Engine:
             shingle_arrays,
         )
 
+        sp = df.sparkSession
         docs = df.select(
             F.col(key_col).alias("doc_id"), F.col(text_col).alias("text")
         )
         n_bands, _ = lsh_params(tau)
         base = path.rstrip("/")
-        band_rows(minhash_signatures(docs), n_bands=n_bands).write.mode(
-            "overwrite"
-        ).parquet(base + "/bands")
-        shingle_arrays(docs, 3).write.mode("overwrite").parquet(base + "/arrays")
-        df.sparkSession.createDataFrame(
+        Engine.index_table(sp, base, "bands").overwrite(
+            band_rows(minhash_signatures(docs), n_bands=n_bands)
+        )
+        Engine.index_table(sp, base, "arrays").overwrite(shingle_arrays(docs, 3))
+        sp.createDataFrame(
             [(json.dumps({"n_bands": n_bands, "tau": tau}),)], "meta string"
         ).coalesce(1).write.mode("overwrite").parquet(base + "/meta")
         return base
@@ -203,163 +261,50 @@ class Engine:
             shingle_arrays,
         )
 
+        sp = df.sparkSession
         base = path.rstrip("/")
-        meta = json.loads(
-            df.sparkSession.read.parquet(base + "/meta").head()[0]
-        )
+        meta = json.loads(sp.read.parquet(base + "/meta").head()[0])
         docs = df.select(
             F.col(key_col).alias("doc_id"), F.col(text_col).alias("text")
         )
-        band_rows(minhash_signatures(docs), n_bands=meta["n_bands"]).write.mode(
-            "append"
-        ).parquet(base + "/bands")
-        shingle_arrays(docs, 3).write.mode("append").parquet(base + "/arrays")
-        return base
-
-    # -- index retraction -------------------------------------------
-    # The third lifecycle verb. A real 100 TB corpus takes deletions
-    # (takedowns, licence revocations) that must propagate to stored
-    # bands / codes / vectors. Deletes are O(|keys|): the keys land in
-    # a tombstone set next to the index and every reader anti-joins it
-    # (broadcast — takedown sets are tiny vs the corpus). Physical
-    # reclamation is a separate offline COMPACT pass (rewrite minus
-    # tombstones, clear the set), the same cadence as PQ retraining:
-    # compact per snapshot, tombstone between snapshots. If the
-    # tombstone set ever outgrows a broadcast, that is the signal the
-    # compact pass is overdue.
-
-    @staticmethod
-    def _normalize_keys(spark: SparkSession, keys) -> DataFrame:
-        """``keys`` as a 1-column DataFrame or an iterable of ids →
-        canonical single-column ``key long`` frame."""
-        if isinstance(keys, DataFrame):
-            col = keys.columns[0]
-            return keys.select(F.col(col).cast("long").alias("key")).distinct()
-        return spark.createDataFrame(
-            [(int(k),) for k in keys], "key long"
-        ).distinct()
-
-    @staticmethod
-    def _without_tombstones(
-        spark: SparkSession, df: DataFrame, ts_path: str, key_col: str
-    ) -> DataFrame:
-        """Anti-join a stored tombstone set (if any) out of ``df``."""
-        import os
-
-        if not os.path.isdir(ts_path):
-            return df
-        ts = spark.read.parquet(ts_path).select(
-            F.col("key").alias(key_col)
+        Engine.index_table(sp, base, "bands").append(
+            band_rows(minhash_signatures(docs), n_bands=meta["n_bands"])
         )
-        return df.join(F.broadcast(ts), key_col, "left_anti")
-
-    @staticmethod
-    def _sweep_compact_debris(root: str) -> None:
-        """Clean leftover ``.compact_*`` staging directories from an
-        interrupted ``_swap_rewrite`` under ``root`` (recursive: the
-        IVF form stages next to cluster partition dirs).
-
-        A crash between ``_swap_rewrite``'s two renames leaves the
-        target ABSENT with ``.<name>.compact_old`` holding the only
-        copy of the data — in that window the old dir is restored
-        (renamed back to the target), never deleted; ``.compact_tmp``
-        dirs and superseded ``.compact_old`` dirs (target present) are
-        plain debris and are removed."""
-        import os
-        import shutil
-
-        for dirpath, dirnames, _ in os.walk(root):
-            for d in list(dirnames):
-                full = os.path.join(dirpath, d)
-                if d.startswith(".") and d.endswith(".compact_old"):
-                    target = os.path.join(
-                        dirpath, d[1 : -len(".compact_old")]
-                    )
-                    if os.path.exists(target):
-                        shutil.rmtree(full, ignore_errors=True)
-                    else:  # mid-swap crash: old holds the only copy
-                        os.rename(full, target)
-                    dirnames.remove(d)
-                elif ".compact_tmp" in d or ".compact_old" in d:
-                    shutil.rmtree(full, ignore_errors=True)
-                    dirnames.remove(d)
-
-    @staticmethod
-    def _swap_rewrite(df: DataFrame, target: str) -> None:
-        """Rewrite ``target`` with ``df``'s rows via write-new + atomic
-        rename — the reader-safe compact pattern (at cluster scale the
-        rename is a metastore/manifest pointer swap).
-
-        Staging dirs are DOT-PREFIXED siblings of the target
-        (``.<name>.compact_tmp``): parquet partition discovery ignores
-        hidden directories, so when the target is a ``cluster=N``
-        partition inside an IVF dataset, a crash mid-compact can never
-        leave a directory that discovery parses as a bogus partition
-        value (r9 advice). Leftover debris is swept by the compaction
-        entry points before they read."""
-        import os
-        import shutil
-
-        parent, name = os.path.split(target.rstrip("/"))
-        tmp = os.path.join(parent, f".{name}.compact_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
-        old = os.path.join(parent, f".{name}.compact_old")
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(target, old)
-        os.rename(tmp, target)
-        shutil.rmtree(old, ignore_errors=True)
+        Engine.index_table(sp, base, "arrays").append(shingle_arrays(docs, 3))
+        return base
 
     @staticmethod
     def minhash_index_remove(
         spark: SparkSession, path: str, keys, compact: bool = False
     ) -> str:
         """Retract documents from a ``build_minhash_index`` layout:
-        append their ids to the index's tombstone set (O(|keys|) — no
-        data rewrite), so ``near_dup_pairs_against_index`` and the
-        stored-band readers stop seeing their bands and shingle
-        arrays. ``compact=True`` additionally rewrites bands/arrays
-        minus all tombstoned keys and clears the set (physical
-        reclamation — run per snapshot). Guarantee, either way:
+        an equality delete of their ids on the bands and arrays tables
+        (O(|keys|) — no data rewrite), so ``near_dup_pairs_against_index``
+        and the stored-band readers stop seeing their bands and shingle
+        arrays. ``compact=True`` additionally rewrites both tables
+        with the deletes applied (physical reclamation — run per
+        snapshot). Guarantee, either way:
         remove(append(build(base), delta), delta) ≡ build(base)."""
         base = path.rstrip("/")
-        ts = base + "/tombstones"
-        Engine._normalize_keys(spark, keys).write.mode("append").parquet(ts)
+        keys = Engine._normalize_keys(spark, keys, "doc_id")
+        for name in Engine._MINHASH_TABLES:
+            Engine.index_table(spark, base, name).delete_keys(keys, "doc_id")
         if compact:
-            Engine.minhash_index_compact(spark, path)
+            Engine.minhash_index_compact(spark, base)
         return base
 
     @staticmethod
     def minhash_index_compact(spark: SparkSession, path: str) -> str:
-        """Physically reclaim tombstoned documents: rewrite the bands
-        and shingle-array partitions without them, then clear the
-        tombstone set. Readers before/after the swap see the same
-        live rows."""
-        import os
-        import shutil
-
-        base = path.rstrip("/")
-        Engine._sweep_compact_debris(base)
-        ts = base + "/tombstones"
-        if not os.path.isdir(ts):
-            return base
-        for sub in ("bands", "arrays"):
-            live = Engine._without_tombstones(
-                spark, spark.read.parquet(f"{base}/{sub}"), ts, "doc_id"
-            )
-            Engine._swap_rewrite(live, f"{base}/{sub}")
-        shutil.rmtree(ts, ignore_errors=True)
-        return base
+        """Physically reclaim removed documents: rewrite the bands and
+        shingle-array tables with their pending deletes applied.
+        Readers before and after the commit see the same live rows."""
+        return Engine._compact(spark, path.rstrip("/"), Engine._MINHASH_TABLES)
 
     @staticmethod
     def read_minhash_bands(spark: SparkSession, path: str) -> DataFrame:
-        """The stored banding rows, tombstones honored — the one read
+        """The stored banding rows, removals honoured — the one read
         path every consumer of the index's bands shares."""
-        base = path.rstrip("/")
-        return Engine._without_tombstones(
-            spark, spark.read.parquet(base + "/bands"),
-            base + "/tombstones", "doc_id",
-        )
+        return Engine.index_table(spark, path, "bands").read()
 
     @staticmethod
     def near_dup_pairs_against_index(
@@ -433,9 +378,7 @@ class Engine:
             .distinct()
         )
         new_arrs = shingle_arrays(docs, 3).localCheckpoint(eager=False)
-        stored_arrs = Engine._without_tombstones(
-            sp, sp.read.parquet(base + "/arrays"), base + "/tombstones", "doc_id"
-        )
+        stored_arrs = Engine.index_table(sp, base, "arrays").read()
         both_arrs = stored_arrs.unionByName(new_arrs)
         within = band_pairs_from_rows(nb)
         return _verify_jaccard_arrays(
@@ -646,10 +589,10 @@ class Engine:
     ) -> str:
         """Materialize a cluster-partitioned ANN index for ``df``:
         vectors assigned to deterministic IVF centroids (smallest
-        ``n_clusters`` keys), written once with precomputed norms,
-        ``partitionBy("cluster")`` — so ``ann_search`` prunes unread
-        directories via PartitionFilters (same layout as
-        q_llm_ann_ivf_indexed). Run it offline per corpus snapshot;
+        ``n_clusters`` keys), written once with precomputed norms into
+        a table partitioned by ``cluster`` — so ``ann_search`` prunes
+        unread partitions via PartitionFilters (the partition layout
+        of q_llm_ann_ivf_indexed). Run it offline per corpus snapshot;
         at 100 TB every subsequent probe reads ~nprobe/n_clusters of
         the files."""
         from iceberg_twist_spark.llm.similarity import ivf_assign, with_norm
@@ -660,7 +603,12 @@ class Engine:
         )
         centroids = emb.orderBy("vec_id").limit(n_clusters)
         clustered = ivf_assign(emb, centroids)
-        clustered.write.mode("overwrite").partitionBy("cluster").parquet(path)
+        rows = Engine.index_table(df.sparkSession, path)
+        if not rows.partition_spec():
+            # a new table takes its spec before the first rows land
+            rows.create(clustered.limit(0))
+            rows.set_partition_spec(["cluster"])
+        rows.overwrite(clustered)
         # centroids ride along so ann_search needs only the index path
         centroids.write.mode("overwrite").parquet(path.rstrip("/") + "_centroids")
         return path
@@ -673,8 +621,8 @@ class Engine:
         layout: assign them to the index's FROZEN centroids (no
         re-clustering — the same snapshot/increment trade as
         ``pq_index_append``) and append into the cluster-partitioned
-        directories, so ``ann_search``'s PartitionFilters pruning
-        keeps working over the grown corpus. Dimensionality is
+        table, so ``ann_search``'s PartitionFilters pruning keeps
+        working over the grown corpus. Dimensionality is
         validated against a stored centroid (a mismatched width would
         silently zip-truncate into wrong assignments)."""
         from iceberg_twist_spark.llm.similarity import ivf_assign, with_norm
@@ -690,8 +638,7 @@ class Engine:
             raise ValueError(
                 f"vector dim {dim} does not match the index's centroid dim {cdim}"
             )
-        clustered = ivf_assign(emb, centroids)
-        clustered.write.mode("append").partitionBy("cluster").parquet(path)
+        Engine.index_table(df.sparkSession, path).append(ivf_assign(emb, centroids))
         return path
 
     @staticmethod
@@ -721,12 +668,7 @@ class Engine:
             .limit(nprobe)
             .collect()
         ]
-        idx = Engine._without_tombstones(
-            spark,
-            spark.read.parquet(path).filter(F.col("cluster").isin(cids)),
-            path.rstrip("/") + "_tombstones",
-            "vec_id",
-        )
+        idx = Engine.index_table(spark, path).read().filter(F.col("cluster").isin(cids))
         sim = r4(_dot(F.col("embedding"), p) / (F.col("nrm") * _norm(p)))
         return (
             idx.select(F.col("vec_id"), sim.alias("cos_sim"))
@@ -776,12 +718,12 @@ class Engine:
             "code", "m", F.col("sv").alias("cw")
         )
         cb1 = S._lloyd_update(S._pq_assign(sub, cb0, carry_sv=True), sub)
-        codes = S._pq_assign(sub, cb1)
+        sp = df.sparkSession
         base = path.rstrip("/")
-        codes.write.mode("overwrite").parquet(base + "/codes")
+        Engine.index_table(sp, base, "codes").overwrite(S._pq_assign(sub, cb1))
         cb1.write.mode("overwrite").parquet(base + "/codebook")
-        S.with_norm(emb, "embedding").write.mode("overwrite").parquet(
-            base + "/vectors"
+        Engine.index_table(sp, base, "vectors").overwrite(
+            S.with_norm(emb, "embedding")
         )
         return base
 
@@ -817,10 +759,11 @@ class Engine:
                 f"vector dim {dim} does not match the index geometry "
                 f"({n_sub} subspaces × {sub_dim} dims = {n_sub * sub_dim})"
             )
+        sp = df.sparkSession
         sub = S._pq_subspaces(emb, sub=sub_dim)
-        S._pq_assign(sub, cb).write.mode("append").parquet(base + "/codes")
-        S.with_norm(emb, "embedding").write.mode("append").parquet(
-            base + "/vectors"
+        Engine.index_table(sp, base, "codes").append(S._pq_assign(sub, cb))
+        Engine.index_table(sp, base, "vectors").append(
+            S.with_norm(emb, "embedding")
         )
         return base
 
@@ -828,89 +771,53 @@ class Engine:
     def pq_index_remove(
         spark: SparkSession, path: str, keys, compact: bool = False
     ) -> str:
-        """Retract vectors from a ``build_pq_ann_index`` layout:
-        tombstone their ids so ``pq_ann_search`` excludes their codes
-        from the ADC scan and their raw vectors from the re-rank.
-        ``compact=True`` physically rewrites codes/vectors minus the
-        tombstones (run per snapshot, with the retrain). Guarantee:
+        """Retract vectors from a ``build_pq_ann_index`` layout: an
+        equality delete of their ids on the codes and vectors tables,
+        so ``pq_ann_search`` excludes their codes from the ADC scan and
+        their raw vectors from the re-rank. ``compact=True``
+        physically rewrites codes/vectors with the deletes applied
+        (run per snapshot, with the retrain). Guarantee:
         remove(append(build(base), delta), delta) ≡ build(base) —
         the codebook is untouched (it is a trained model, not per-row
         state; retraining is the rebuild verb's job)."""
         base = path.rstrip("/")
-        ts = base + "/tombstones"
-        Engine._normalize_keys(spark, keys).write.mode("append").parquet(ts)
+        keys = Engine._normalize_keys(spark, keys, "vec_id")
+        for name in Engine._PQ_TABLES:
+            Engine.index_table(spark, base, name).delete_keys(keys, "vec_id")
         if compact:
-            Engine.pq_index_compact(spark, path)
+            Engine.pq_index_compact(spark, base)
         return base
 
     @staticmethod
     def pq_index_compact(spark: SparkSession, path: str) -> str:
-        """Physically reclaim tombstoned vectors from the codes and
-        vectors partitions, then clear the tombstone set."""
-        import os
-        import shutil
-
-        base = path.rstrip("/")
-        Engine._sweep_compact_debris(base)
-        ts = base + "/tombstones"
-        if not os.path.isdir(ts):
-            return base
-        for sub in ("codes", "vectors"):
-            live = Engine._without_tombstones(
-                spark, spark.read.parquet(f"{base}/{sub}"), ts, "vec_id"
-            )
-            Engine._swap_rewrite(live, f"{base}/{sub}")
-        shutil.rmtree(ts, ignore_errors=True)
-        return base
+        """Physically reclaim removed vectors: rewrite the codes and
+        vectors tables with their pending deletes applied."""
+        return Engine._compact(spark, path.rstrip("/"), Engine._PQ_TABLES)
 
     @staticmethod
     def ann_index_remove(
         spark: SparkSession, path: str, keys, compact: bool = False
     ) -> str:
-        """Retract vectors from a ``build_ann_index`` (IVF) layout.
-        The tombstone set lives NEXT TO the cluster-partitioned data
-        (``<path>_tombstones``, like ``<path>_centroids``) so the
-        partitioned directory stays a clean parquet dataset;
-        ``ann_search`` anti-joins it after the directory-pruned scan.
-        ``compact=True`` rewrites each AFFECTED cluster partition
-        minus its tombstoned rows — only clusters containing removed
-        vectors are touched, the rest of the layout is not rewritten
-        — then clears the set. Frozen centroids are untouched."""
+        """Retract vectors from a ``build_ann_index`` (IVF) layout: an
+        equality delete of their ids on the cluster-partitioned table,
+        which ``ann_search`` anti-joins after the partition-pruned
+        scan. ``compact=True`` rewrites only the cluster files that
+        contain removed vectors — the rest of the layout is carried
+        over unchanged. Frozen centroids are untouched."""
         base = path.rstrip("/")
-        ts = base + "_tombstones"
-        Engine._normalize_keys(spark, keys).write.mode("append").parquet(ts)
+        Engine.index_table(spark, base).delete_keys(
+            Engine._normalize_keys(spark, keys, "vec_id"), "vec_id"
+        )
         if compact:
-            Engine.ann_index_compact(spark, path)
+            Engine.ann_index_compact(spark, base)
         return base
 
     @staticmethod
     def ann_index_compact(spark: SparkSession, path: str) -> str:
-        """Physically reclaim tombstoned vectors from the IVF layout,
-        rewriting only the cluster partitions that contain them."""
-        import os
-        import shutil
-
+        """Physically reclaim removed vectors from the IVF table,
+        rewriting only the cluster files that contain them."""
         base = path.rstrip("/")
-        Engine._sweep_compact_debris(base)
-        ts = base + "_tombstones"
-        if not os.path.isdir(ts):
-            return base
-        keys = spark.read.parquet(ts).select(F.col("key").alias("vec_id"))
-        idx = spark.read.parquet(base)
-        # bounded collect: the distinct clusters holding removed rows
-        hit = [
-            r.cluster
-            for r in idx.join(F.broadcast(keys), "vec_id")
-            .select("cluster").distinct().collect()
-        ]
-        for c in hit:
-            part = os.path.join(base, f"cluster={c}")
-            live = (
-                spark.read.parquet(part)
-                .join(F.broadcast(keys.select(F.col("vec_id"))), "vec_id", "left_anti")
-            )
-            Engine._swap_rewrite(live, part)
-        shutil.rmtree(ts, ignore_errors=True)
+        Engine.index_table(spark, base).apply_deletes()
         return base
 
     @staticmethod
@@ -933,13 +840,8 @@ class Engine:
 
         base = path.rstrip("/")
         cb = spark.read.parquet(base + "/codebook")
-        ts = base + "/tombstones"
-        codes = Engine._without_tombstones(
-            spark, spark.read.parquet(base + "/codes"), ts, "vec_id"
-        )
-        vectors = Engine._without_tombstones(
-            spark, spark.read.parquet(base + "/vectors"), ts, "vec_id"
-        )
+        codes = Engine.index_table(spark, base, "codes").read()
+        vectors = Engine.index_table(spark, base, "vectors").read()
         p = F.array(*[F.lit(float(x)) for x in probe])
         # recover the index's subspace geometry from the codebook
         # (sub_dim = codeword width) so the LUT matches the encode; a

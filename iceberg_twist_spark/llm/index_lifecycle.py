@@ -61,7 +61,7 @@ DELTA_MOD = 5
 # q_llm_minhash_dedup SQL.
 MINHASH_APPEND_TAU = 0.9
 
-_LIFECYCLE_VERSION = 2
+_LIFECYCLE_VERSION = 3
 
 # which source table each lifecycle kind reads — the fingerprint must
 # track THAT table so a documents-only fixture regeneration cannot
@@ -115,8 +115,7 @@ def q_llm_minhash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         Engine.minhash_index_append(delta, "text", "doc_id", path)
         with open(marker, "w") as f:
             f.write("ok")
-    stored = spark.read.parquet(path + "/bands")
-    return band_pairs_from_rows(stored)
+    return band_pairs_from_rows(Engine.read_minhash_bands(spark, path))
 
 
 def _pqa_assign_sql(cb: str, src: str) -> str:
@@ -233,10 +232,11 @@ def q_llm_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     remove(append(build(base), delta), delta)
 # — and its oracle is the from-scratch build over base alone, the
 # exact mirror of the append family's append ≡ rebuild. The MinHash
-# query retracts via TOMBSTONES (the O(|keys|) online path: readers
-# anti-join the set), the PQ query retracts via COMPACTION (the
-# physical-reclamation path: affected partitions rewritten, set
-# cleared) — so the driver gate covers both mechanisms end-to-end.
+# query retracts via merge-on-read EQUALITY DELETES (the O(|keys|)
+# online path: readers anti-join the delete files), the PQ and IVF
+# queries via COMPACTION (the physical-reclamation path: the tables
+# rewritten with the deletes applied and cleared) — so the oracle hash
+# gate covers both mechanisms end-to-end.
 
 
 @register(
@@ -250,8 +250,8 @@ def q_llm_minhash_index_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     """remove(append(base, delta), delta) ≡ rebuild(base) for the
     MinHash/LSH index: build over 80% of the corpus, append the other
     20%, then RETRACT exactly that delta through
-    ``Engine.minhash_index_remove`` (tombstone path — O(|keys|), no
-    data rewrite). The tombstone-honoring band reader must then
+    ``Engine.minhash_index_remove`` (equality-delete path —
+    O(|keys|), no data rewrite). The delete-honouring band reader must then
     produce the banded pair set of the BASE snapshot alone, which the
     oracle derives from scratch — a band row or shingle array that
     survives retraction breaks the hash."""
@@ -285,9 +285,9 @@ def q_llm_pq_index_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     """remove(append(base, delta), delta) ≡ rebuild(base) for the PQ
     index, via the PHYSICAL path: build over the 80% base (codebook
     frozen there), append the 20% delta, then retract the delta with
-    ``compact=True`` — codes and vectors partitions are rewritten
-    without the removed ids and the tombstone set is cleared, so the
-    on-disk state is byte-equivalent to never having appended. The
+    ``compact=True`` — the codes and vectors tables are rewritten
+    without the removed ids and their pending deletes cleared, so the
+    live state is row-for-row the one never appending leaves. The
     probe (vec_id 0, itself retracted) is searched as a literal; the
     oracle trains on base and encodes base only."""
     from iceberg_twist_spark.api import Engine
@@ -356,9 +356,9 @@ def q_llm_ivf_index_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     """remove(append(base, delta), delta) ≡ rebuild(base) for the IVF
     index: build the cluster-partitioned layout over the 80% base,
     append the 20% delta, retract the delta with ``compact=True`` —
-    only the cluster partitions that actually contain removed rows
-    are rewritten (the rest of the layout is untouched), the frozen
-    centroids stay. ``ann_search``'s directory pruning then answers
+    only the cluster files that actually contain removed rows are
+    rewritten (the rest of the layout is carried over), the frozen
+    centroids stay. ``ann_search``'s partition pruning then answers
     the literal probe over exactly the base vectors."""
     from iceberg_twist_spark.api import Engine
 
@@ -502,9 +502,9 @@ def q_llm_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-partitioned index over 80% of the vectors (centroids
     frozen from that snapshot), append the other 20% — probe included
     — through ``Engine.ann_index_append`` (assign to frozen centroids,
-    append into the partition directories), then answer the standard
+    append to the cluster-partitioned table), then answer the standard
     probe with ``Engine.ann_search`` whose nprobe IN-list still prunes
-    at the directory level over the grown corpus. The oracle assigns
+    partitions over the grown corpus. The oracle assigns
     every vector against the base-snapshot centroids — exactly the
     on-disk state the append must produce."""
     from iceberg_twist_spark.api import Engine
@@ -626,7 +626,7 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         # materialize the stored bands NOW — the caller's collect runs
         # after the finally block has removed the index directory
-        stored = spark.read.parquet(path + "/bands").localCheckpoint(eager=True)
+        stored = Engine.read_minhash_bands(spark, path).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(path, ignore_errors=True)

@@ -5,9 +5,8 @@ Reference surface: A3/A4 (whole-file source, overwrite sink —
 `iceberg-twist/main.py:43-57`), A15 (routed/partitioned output —
 `iceberg-twist/transparent_serial_proxy.lua:191,204-215`). The north
 star adds Iceberg read/write/maintenance: the real-jar path is guarded
-here on runtime availability (SURVEY.md §4.2; the jar is proven
-non-provisionable in this sandbox — tools/provision_iceberg_attempt.log),
-while the table-format semantics themselves (snapshots, time travel,
+here on runtime availability (SURVEY.md §4.2; the jar cannot be
+provisioned without network access), while the table-format semantics themselves (snapshots, time travel,
 compaction) run for real in sources/snapshots.py.
 
 Each roundtrip query materializes through a real on-disk sink and

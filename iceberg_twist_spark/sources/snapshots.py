@@ -4,12 +4,11 @@ and ``rewrite_data_files`` compaction — in pure PySpark.
 
 The engine's namesake capability (SURVEY.md §2.B sources row: Iceberg
 read/write/time-travel/compaction). The real iceberg-spark runtime jar
-is not provisionable in this sandbox — ``tools/provision_iceberg.py``
-proves it (classpath empty, no ivy cache, Maven Central unreachable,
-live ``spark.jars.packages`` resolution fails UNRESOLVED; log in
-``tools/provision_iceberg_attempt.log``) — so this module implements
-the table-format *semantics* directly on the two primitives Iceberg
-itself builds on: immutable data files + an atomic metadata pointer.
+cannot be provisioned without network access (it is not on the
+classpath and no package repository is reachable), so this module
+implements the table-format *semantics* directly on the two primitives
+Iceberg itself builds on: immutable data files + an atomic metadata
+pointer.
 
 Layout (mirrors Iceberg's hadoop-catalog layout, simplified):
 
@@ -406,6 +405,17 @@ class SnapshotTable:
 
         return int(pq.ParquetFile(path).metadata.num_rows)
 
+    def _rows(self, files: list[str], fm: dict | None = None) -> int:
+        """Total records of ``files`` from the per-file sidecar; files
+        recorded without a row count fall back to their parquet footer
+        (no data scan either way)."""
+        fm = self._files_meta() if fm is None else fm
+        total = 0
+        for p in files:
+            rows = fm.get(p, {}).get("rows")
+            total += self._file_rows(p) if rows is None else rows
+        return total
+
     def _write_files(
         self, df: DataFrame, partition_spec: list[str] | None = None
     ) -> tuple[list[str], int, dict, dict]:
@@ -468,11 +478,6 @@ class SnapshotTable:
                             "spec": list(partition_spec),
                             "rows": self._file_rows(dst),
                         }
-                n = (
-                    self.spark.read.option("basePath", base).parquet(*files).count()
-                    if files
-                    else 0
-                )
             else:
                 df.write.mode("overwrite").parquet(stage)
                 for name in sorted(os.listdir(stage)):
@@ -487,8 +492,7 @@ class SnapshotTable:
                         "partition": {},
                         "rows": self._file_rows(dst),
                     }
-                n = self.spark.read.parquet(*files).count() if files else 0
-            return files, n, stats, nfm
+            return files, sum(f["rows"] for f in nfm.values()), stats, nfm
         finally:
             shutil.rmtree(stage, ignore_errors=True)
 
@@ -693,21 +697,26 @@ class SnapshotTable:
         with open(mpath, "w") as f:
             json.dump(manifest, f)
         if update_hint:
-            # optimistic concurrency: the snapshot this commit was
-            # built against must STILL be current at the swap —
-            # Iceberg's compare-and-swap against the catalog pointer.
-            # A concurrent committer who won the race leaves this
-            # manifest parentless-on-main (reclaimable by expire);
-            # swapping anyway would silently drop their commit from
-            # the history chain (lost update).
-            now = self.current_snapshot_id()
-            if now != (parent or 0):
-                raise ValueError(
-                    f"commit conflict: built against snapshot {parent or 0} "
-                    f"but {now} is now current — retry against the new head"
-                )
-            # atomic pointer swap — the commit point
-            self._swap_hint(snap)
+            try:
+                # optimistic concurrency: the snapshot this commit was
+                # built against must STILL be current at the swap —
+                # Iceberg's compare-and-swap against the catalog
+                # pointer. Swapping anyway would silently drop the
+                # winner's commit from the history chain (lost update).
+                now = self.current_snapshot_id()
+                if now != (parent or 0):
+                    raise ValueError(
+                        f"commit conflict: built against snapshot {parent or 0} "
+                        f"but {now} is now current — retry against the new head"
+                    )
+                # atomic pointer swap — the commit point
+                self._swap_hint(snap)
+            except Exception:
+                # a commit that fails here leaves no manifest: its
+                # data files are referenced by nothing, so readers
+                # never see them and remove_orphan_files reclaims them
+                os.remove(mpath)
+                raise
         return snap
 
     def _swap_hint(self, snap: int) -> None:
@@ -956,8 +965,13 @@ class SnapshotTable:
         than the delete (delete-then-reinsert reads correctly).
 
         Files are GROUPED by (written schema, field binding, base,
-        applicable deletes) — one scan per vintage, not per file, so a
-        long append history with no pending deletes is a single scan.
+        position deletes) — one scan per vintage, not per file, so a
+        long append history is a single scan; each scan is given the
+        schema its files were written with, so it needs no inference
+        job. Equality deletes cost ONE broadcast per key column however
+        many delete commits are pending: every delete row carries its
+        commit's sequence number, every data row its file's, and the
+        anti-join matches a key only where the data is older.
         """
         schema_meta = m["schema_meta"]
         struct = self._struct_from_meta(schema_meta)
@@ -971,9 +985,19 @@ class SnapshotTable:
         if not files:
             return self.spark.createDataFrame([], empty_struct)
         fm = self._files_meta()
-        eq_deletes = m.get("eq_deletes", [])
         pos_deletes = m.get("pos_deletes", [])
         cur_name_by_id = {int(f[0]): f[1] for f in schema_meta}
+        # equality deletes by (current key name, name written in the
+        # delete file). Resolve strictly by field id when the entry
+        # carries one: after drop_column the id maps to nothing (the
+        # delete is skipped), and a later same-named re-add gets a
+        # FRESH id, so an old delete can never latch onto the
+        # unrelated column
+        eq_by_key: dict[tuple[str, str], list[dict]] = {}
+        for d in m.get("eq_deletes", []):
+            kname = cur_name_by_id.get(d["fid"]) if "fid" in d else d["key"]
+            if kname is not None:
+                eq_by_key.setdefault((kname, d["key"]), []).append(d)
 
         norm = self._norm_uri  # URI form → plain manifest path
 
@@ -981,10 +1005,6 @@ class SnapshotTable:
         groups: dict[tuple, list[str]] = {}
         for p in files:
             info = fm.get(p, {})
-            seq = info.get("seq", 0)
-            eq_ids = tuple(
-                i for i, d in enumerate(eq_deletes) if d.get("seq", 1 << 62) > seq
-            )
             pos_ids = tuple(
                 i
                 for i, d in enumerate(pos_deletes)
@@ -994,19 +1014,21 @@ class SnapshotTable:
                 info.get("schema") or "",
                 json.dumps(info.get("field_ids", {}), sort_keys=True),
                 info.get("base"),
-                eq_ids,
                 pos_ids,
             )
             groups.setdefault(key, []).append(p)
 
         parts: list[DataFrame] = []
-        for (schema_json, fid_json, base, eq_ids, pos_ids), fl in groups.items():
+        for (schema_json, fid_json, base, pos_ids), fl in groups.items():
             reader = self.spark.read
+            if schema_json:
+                reader = reader.schema(
+                    T.StructType.fromJson(json.loads(schema_json))
+                )
             if base:
                 reader = reader.option("basePath", base)
             df = reader.parquet(*fl)
-            need_meta = keep_meta or bool(pos_ids)
-            if need_meta:
+            if keep_meta or pos_ids or eq_by_key:
                 df = df.select(
                     "*",
                     F.col("_metadata.file_path").alias("_file_path"),
@@ -1038,28 +1060,46 @@ class SnapshotTable:
                     cols.append(F.lit(None).cast(ftype).alias(name))
             if keep_meta:
                 cols += [F.col("_file_path"), F.col("_pos")]
+            if eq_by_key:
+                seqs = {p: fm.get(p, {}).get("seq", 0) for p in fl}
+                cols.append(self._seq_by_name(seqs, "_file_path").alias("_seq"))
             df = df.select(*cols)
             # sequence-scoped equality deletes (post-projection: keys
             # compare under current names/types)
-            for i in eq_ids:
-                d = eq_deletes[i]
-                # resolve strictly by field id when the entry carries
-                # one: after drop_column the id maps to nothing (skip),
-                # and a later same-named re-add gets a FRESH id, so the
-                # old delete can never latch onto the unrelated column
-                kname = (
-                    cur_name_by_id.get(d["fid"]) if "fid" in d else d["key"]
+            for (kname, written), ds in eq_by_key.items():
+                dk = self.spark.read.schema(
+                    T.StructType([T.StructField(written, struct[kname].dataType)])
+                ).parquet(*[d["path"] for d in ds])
+                dseqs = {d["path"]: d.get("seq", 1 << 62) for d in ds}
+                dk = dk.select(
+                    F.col(written).alias("_eq_key"),
+                    self._seq_by_name(dseqs, "_metadata.file_path").alias("_eq_seq"),
                 )
-                if kname is None:
-                    continue  # delete targets a since-dropped column
-                dk = self.spark.read.parquet(d["path"])
-                dk = dk.select(F.col(dk.columns[0]).alias(kname))
-                df = df.join(F.broadcast(dk), kname, "left_anti")
-            parts.append(df)
+                df = df.join(
+                    F.broadcast(dk),
+                    (F.col(kname) == F.col("_eq_key"))
+                    & (F.col("_seq") < F.col("_eq_seq")),
+                    "left_anti",
+                )
+            parts.append(df.drop("_seq"))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    @staticmethod
+    def _seq_by_name(seqs: dict[str, int], path_col: str):
+        """Per-row sequence number of the file a row was read from,
+        looked up by file NAME in ``seqs`` ({path: seq}) — data and
+        delete files are uuid-named, so a name is unique in a table."""
+        lookup = F.create_map(
+            *[
+                x
+                for p, q in seqs.items()
+                for x in (F.lit(os.path.basename(p)), F.lit(q).cast("long"))
+            ]
+        )
+        return lookup[F.substring_index(F.col(path_col), "/", -1)]
 
     def read(
         self,
@@ -1345,6 +1385,57 @@ class SnapshotTable:
             return p[5:]
         return p
 
+    def _split_files(
+        self, cur: dict, hits: DataFrame
+    ) -> tuple[list[str], list[str]]:
+        """(untouched, to_rewrite): the manifest's files split by
+        whether ``hits`` — a ``keep_meta`` read narrowed to the rows a
+        copy-on-write commit changes — holds a row from them. One
+        bounded collect: at most the manifest's file count."""
+        hit = {
+            self._norm_uri(r._file_path)
+            for r in hits.select("_file_path").distinct().collect()
+        }
+        return (
+            [f for f in cur["files"] if f not in hit],
+            [f for f in cur["files"] if f in hit],
+        )
+
+    def _commit_rewrite(
+        self,
+        cur_id: int,
+        cur: dict,
+        untouched: list[str],
+        out: DataFrame,
+        operation: str,
+        clear_deletes: bool = False,
+    ) -> int:
+        """The copy-on-write commit: ``out`` replaces every current
+        file not in ``untouched``; untouched files carry into the new
+        manifest verbatim with their sequence numbers and zone maps,
+        so pending deletes stay correctly scoped to them (or are
+        dropped with ``clear_deletes`` once ``out`` has applied them
+        all); rewritten files take the new commit's sequence."""
+        files, n_new, st, nfm = self._write_files(
+            out, cur.get("partition_spec") or None
+        )
+        keep = set(untouched)
+        kept_stats = {
+            f: s for f, s in cur.get("file_stats", {}).items() if f in keep
+        }
+        return self._commit(
+            untouched + files,
+            self._rows(untouched) + n_new,
+            operation,
+            out.schema.json(),
+            {**kept_stats, **st},
+            eq_deletes=[] if clear_deletes else cur.get("eq_deletes", []),
+            pos_deletes=[] if clear_deletes else cur.get("pos_deletes", []),
+            new_file_meta=nfm,
+            schema_meta=cur["schema_meta"],
+            parent=cur_id,
+        )
+
     def merge(self, source: DataFrame, key: str) -> int:
         """Copy-on-write MERGE INTO, file-pruned exactly like
         Iceberg's: WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED
@@ -1367,16 +1458,12 @@ class SnapshotTable:
             raise ValueError(f"no snapshots in {self.path}")
         cur = self._manifest(cur_id)
         keys_df = source.select(key)
-        hits = (
-            self.read(snapshot_id=cur_id, keep_meta=True)
-            .join(keys_df, on=key, how="left_semi")
-            .select("_file_path")
-            .distinct()
-            .collect()  # bounded by the manifest's file count
+        untouched, to_rewrite = self._split_files(
+            cur,
+            self.read(snapshot_id=cur_id, keep_meta=True).join(
+                keys_df, on=key, how="left_semi"
+            ),
         )
-        hit_paths = {self._norm_uri(r._file_path) for r in hits}
-        untouched = [f for f in cur["files"] if f not in hit_paths]
-        to_rewrite = [f for f in cur["files"] if f in hit_paths]
         survivors = self._read_files(cur, to_rewrite).join(
             keys_df, on=key, how="left_anti"
         )
@@ -1385,32 +1472,7 @@ class SnapshotTable:
         merged = survivors.unionByName(
             source.select(*[f[1] for f in cur["schema_meta"]])
         )
-        spec = self.partition_spec()
-        files, n_new, st, nfm = self._write_files(merged, spec or None)
-        fm = self._files_meta()
-        n_keep = 0
-        missing = [f for f in untouched if fm.get(f, {}).get("rows") is None]
-        if missing:
-            n_keep += self.spark.read.parquet(*missing).count()
-        n_keep += sum(
-            fm[f]["rows"] for f in untouched
-            if fm.get(f, {}).get("rows") is not None
-        )
-        kept_stats = {
-            f: s for f, s in cur.get("file_stats", {}).items() if f in set(untouched)
-        }
-        return self._commit(
-            untouched + files,
-            n_keep + n_new,
-            "merge",
-            merged.schema.json(),
-            {**kept_stats, **st},
-            eq_deletes=cur.get("eq_deletes", []),
-            pos_deletes=cur.get("pos_deletes", []),
-            new_file_meta=nfm,
-            schema_meta=cur["schema_meta"],
-            parent=cur_id,
-        )
+        return self._commit_rewrite(cur_id, cur, untouched, merged, "merge")
 
     def snapshot_as_of(self, ts: float) -> int:
         """The snapshot id in force at wall-clock ``ts`` (epoch
@@ -1445,16 +1507,9 @@ class SnapshotTable:
         unknown = [c for c in assignments if c not in names]
         if unknown:
             raise ValueError(f"assignments target unknown columns: {unknown}")
-        hits = (
-            self.read(snapshot_id=cur_id, keep_meta=True)
-            .filter(condition)
-            .select("_file_path")
-            .distinct()
-            .collect()  # bounded by the manifest's file count
+        untouched, to_rewrite = self._split_files(
+            cur, self.read(snapshot_id=cur_id, keep_meta=True).filter(condition)
         )
-        hit_paths = {self._norm_uri(r._file_path) for r in hits}
-        untouched = [f for f in cur["files"] if f not in hit_paths]
-        to_rewrite = [f for f in cur["files"] if f in hit_paths]
         base = self._read_files(cur, to_rewrite)
         updated = base.select(
             *[
@@ -1466,32 +1521,7 @@ class SnapshotTable:
                 for c in names
             ]
         )
-        spec = self.partition_spec()
-        files, n_new, st, nfm = self._write_files(updated, spec or None)
-        fm = self._files_meta()
-        n_keep = 0
-        missing = [f for f in untouched if fm.get(f, {}).get("rows") is None]
-        if missing:
-            n_keep += self.spark.read.parquet(*missing).count()
-        n_keep += sum(
-            fm[f]["rows"] for f in untouched
-            if fm.get(f, {}).get("rows") is not None
-        )
-        kept_stats = {
-            f: s for f, s in cur.get("file_stats", {}).items() if f in set(untouched)
-        }
-        return self._commit(
-            untouched + files,
-            n_keep + n_new,
-            "update",
-            updated.schema.json(),
-            {**kept_stats, **st},
-            eq_deletes=cur.get("eq_deletes", []),
-            pos_deletes=cur.get("pos_deletes", []),
-            new_file_meta=nfm,
-            schema_meta=cur["schema_meta"],
-            parent=cur_id,
-        )
+        return self._commit_rewrite(cur_id, cur, untouched, updated, "update")
 
     def row_count(self, snapshot_id: int | None = None) -> int:
         """Total DATA-FILE rows at a snapshot, served from the
@@ -1514,12 +1544,7 @@ class SnapshotTable:
                 "merge-on-read deletes make the data-file total diverge "
                 "from read().count(); use read().count() on MOR tables"
             )
-        fm = self._files_meta()
-        total = 0
-        for p in m["files"]:
-            rows = fm.get(p, {}).get("rows")
-            total += self._file_rows(p) if rows is None else rows
-        return total
+        return self._rows(m["files"])
 
     def partitions_metadata(self) -> list[dict]:
         """The ``.partitions`` metadata table, computed WITHOUT any
@@ -1542,10 +1567,7 @@ class SnapshotTable:
                 key, {"partition": dict(part), "n_files": 0, "n_records": 0}
             )
             slot["n_files"] += 1
-            rows = info.get("rows")
-            if rows is None:
-                rows = self._file_rows(p)
-            slot["n_records"] += rows
+            slot["n_records"] += self._rows([p], fm)
         return sorted(agg.values(), key=lambda s: sorted(s["partition"].items()))
 
     def merge_into(
@@ -1602,10 +1624,7 @@ class SnapshotTable:
             self.read(snapshot_id=cur_id, keep_meta=True)
             .join(keys_df, on=key, how="left_semi")
             .select("_file_path")
-            .distinct()
-            .collect()  # bounded by the manifest's file count
         )
-        hit_paths = {self._norm_uri(r._file_path) for r in hits}
         nmbs_conds: list[str | bool] = []
         if not_matched_by_source_delete is not None:
             nmbs_conds.append(not_matched_by_source_delete)
@@ -1625,12 +1644,8 @@ class SnapshotTable:
                 extra = extra.filter(
                     F.expr(" OR ".join(f"({c})" for c in nmbs_conds))
                 )
-            hit_paths |= {
-                self._norm_uri(r._file_path)
-                for r in extra.select("_file_path").distinct().collect()
-            }
-        untouched = [f for f in cur["files"] if f not in hit_paths]
-        to_rewrite = [f for f in cur["files"] if f in hit_paths]
+            hits = hits.unionByName(extra.select("_file_path"))
+        untouched, to_rewrite = self._split_files(cur, hits)
         t = self._read_files(cur, to_rewrite).alias("t")
         s = source.alias("s")
         joined = t.join(
@@ -1681,33 +1696,7 @@ class SnapshotTable:
                 t.select(key), on=key, how="left_anti"
             ).select(*names)
             out = survivors.unionByName(inserts)
-        spec = self.partition_spec()
-        files, n_new, st, nfm = self._write_files(out, spec or None)
-        fm = self._files_meta()
-        n_keep = 0
-        missing = [f for f in untouched if fm.get(f, {}).get("rows") is None]
-        if missing:
-            n_keep += self.spark.read.parquet(*missing).count()
-        n_keep += sum(
-            fm[f]["rows"] for f in untouched
-            if fm.get(f, {}).get("rows") is not None
-        )
-        kept_stats = {
-            f: stt for f, stt in cur.get("file_stats", {}).items()
-            if f in set(untouched)
-        }
-        return self._commit(
-            untouched + files,
-            n_keep + n_new,
-            "merge",
-            out.schema.json(),
-            {**kept_stats, **st},
-            eq_deletes=cur.get("eq_deletes", []),
-            pos_deletes=cur.get("pos_deletes", []),
-            new_file_meta=nfm,
-            schema_meta=cur["schema_meta"],
-            parent=cur_id,
-        )
+        return self._commit_rewrite(cur_id, cur, untouched, out, "merge")
 
     def delete_where(self, condition) -> int:
         """Copy-on-write DELETE, file-pruned exactly like Iceberg's:
@@ -1726,46 +1715,13 @@ class SnapshotTable:
         if cur_id == 0:
             raise ValueError(f"no snapshots in {self.path}")
         cur = self._manifest(cur_id)
-        hits = (
-            self.read(snapshot_id=cur_id, keep_meta=True)
-            .filter(condition)
-            .select("_file_path")
-            .distinct()
-            .collect()  # bounded by the manifest's file count
+        untouched, to_rewrite = self._split_files(
+            cur, self.read(snapshot_id=cur_id, keep_meta=True).filter(condition)
         )
-
-        hit_paths = {self._norm_uri(r._file_path) for r in hits}
-        untouched = [f for f in cur["files"] if f not in hit_paths]
-        to_rewrite = [f for f in cur["files"] if f in hit_paths]
         survivors = self._read_files(cur, to_rewrite).filter(
             ~F.coalesce(condition, F.lit(False))
         )
-        spec = self.partition_spec()
-        files, n_new, st, nfm = self._write_files(survivors, spec or None)
-        fm = self._files_meta()
-        n_keep = 0
-        missing = [f for f in untouched if fm.get(f, {}).get("rows") is None]
-        if missing:
-            n_keep += self.spark.read.parquet(*missing).count()
-        n_keep += sum(
-            fm[f]["rows"] for f in untouched
-            if fm.get(f, {}).get("rows") is not None
-        )
-        kept_stats = {
-            f: s for f, s in cur.get("file_stats", {}).items() if f in set(untouched)
-        }
-        return self._commit(
-            untouched + files,
-            n_keep + n_new,
-            "delete",
-            survivors.schema.json(),
-            {**kept_stats, **st},
-            eq_deletes=cur.get("eq_deletes", []),
-            pos_deletes=cur.get("pos_deletes", []),
-            new_file_meta=nfm,
-            schema_meta=cur["schema_meta"],
-            parent=cur_id,
-        )
+        return self._commit_rewrite(cur_id, cur, untouched, survivors, "delete")
 
     def delete_keys(self, keys: DataFrame, key_col: str) -> int:
         """MERGE-ON-READ equality DELETE (Iceberg v2 delete files):
@@ -1791,18 +1747,19 @@ class SnapshotTable:
         if cur_id == 0:
             raise ValueError(f"no snapshots in {self.path}")
         cur = self._manifest(cur_id)
-        fid = next(
-            (int(f[0]) for f in cur["schema_meta"] if f[1] == key_col), None
-        )
-        if fid is None:
+        field = next((f for f in cur["schema_meta"] if f[1] == key_col), None)
+        if field is None:
             raise ValueError(f"no such column: {key_col!r}")
+        fid = int(field[0])
         ddir = os.path.join(self.path, "deletes")
         os.makedirs(ddir, exist_ok=True)
         stage = tempfile.mkdtemp(prefix="itws_delstage_")
         try:
-            keys.select(F.col(key_col)).distinct().coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
+            # written under the column's type, so readers scan delete
+            # files with a known schema (no inference job)
+            ktype = self._struct_from_meta([field])[key_col].dataType
+            keys.select(F.col(key_col).cast(ktype).alias(key_col)).distinct(
+            ).coalesce(1).write.mode("overwrite").parquet(stage)
             part = next(
                 f for f in sorted(os.listdir(stage)) if f.endswith(".parquet")
             )
@@ -1877,6 +1834,40 @@ class SnapshotTable:
         )
 
     # ---- maintenance ---------------------------------------------------
+    def apply_deletes(self) -> int:
+        """Compaction scoped to the pending merge-on-read deletes: ONLY
+        the data files they remove rows from are rewritten, with every
+        equality and position delete applied, and the delete lists
+        clear; every other file carries into the new manifest verbatim
+        (the copy-on-write tail ``delete_where`` uses). A file is hit
+        when its live row count is below its recorded row count — one
+        grouped count, bounded by the file count. Live content does not
+        change, so the commit is a ``rewrite``. With no pending deletes
+        nothing is committed and the current snapshot id returns."""
+        cur_id = self.current_snapshot_id()
+        if cur_id == 0:
+            raise ValueError(f"no snapshots in {self.path}")
+        cur = self._manifest(cur_id)
+        if not (cur.get("eq_deletes") or cur.get("pos_deletes")):
+            return cur_id
+        live = {
+            self._norm_uri(r[0]): r[1]
+            for r in self.read(snapshot_id=cur_id, keep_meta=True)
+            .groupBy("_file_path")
+            .count()
+            .collect()
+        }
+        fm = self._files_meta()
+        untouched = [
+            f for f in cur["files"] if live.get(f, 0) == self._rows([f], fm)
+        ]
+        keep = set(untouched)
+        hit = [f for f in cur["files"] if f not in keep]
+        return self._commit_rewrite(
+            cur_id, cur, untouched, self._read_files(cur, hit), "rewrite",
+            clear_deletes=True,
+        )
+
     def rollback_to(self, snapshot_id: int) -> int:
         """Iceberg's ``rollback_to_snapshot``: commit a NEW snapshot
         whose content is the target's file list — history stays
@@ -2902,8 +2893,9 @@ def q_iceberg_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete physically and clears it, leaving the read unchanged. Both
     the MOR read (snapshot 2) and the compacted read (snapshot 3) must
     equal the oracle; time travel to snapshot 1 still shows the
-    deleted rows (asserted in-plan). A ten-row takedown on a 100 TB
-    table costs a key file, not a table rewrite."""
+    deleted rows (both pinned by test_mor_query_equivalence). A
+    ten-row takedown on a 100 TB table costs a key file, not a table
+    rewrite."""
     tbl = _mor_table(spark, sf_dir)
     # The time-travel and MOR≡compacted equivalence invariants are
     # pinned by test_mor_query_equivalence (r12): asserting them
@@ -2963,8 +2955,8 @@ def q_iceberg_mor_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet reader's ``_metadata`` (file, row-ordinal) columns,
     scoped inherently to the named files; a later compaction applies
     the delete physically and clears it, leaving the read unchanged
-    (post-compact ≡ pre-compact asserted in-plan). Time travel to
-    snapshot 1 still shows the rows. Reference parity:
+    (post-compact ≡ pre-compact and time travel to snapshot 1 still
+    showing the rows are pinned by test_mor_query_equivalence). Reference parity:
     iceberg-twist keeps only whole-payload rewrites
     (iceberg-twist/main.py:34-103); this is the v2 delete-file form
     its users would need at lakehouse scale."""

@@ -258,7 +258,8 @@ def test_ann_index_facade_matches_brute_force(spark, sf_dir):
     path = os.path.join(tempfile.mkdtemp(prefix="itws_annidx_"), "idx")
     try:
         Engine.build_ann_index(emb, "embedding", "vec_id", path)
-        assert any(d.startswith("cluster=") for d in os.listdir(path))
+        parts = Engine.index_table(spark, path).partitions_metadata()
+        assert len(parts) > 1 and all("cluster" in p["partition"] for p in parts)
         got = Engine.ann_search(spark, path, probe, k=5, nprobe=16)  # all clusters
         rows = got.collect()
         assert len(rows) == 5
@@ -778,17 +779,18 @@ def test_pq_index_append_serves_new_vectors(spark, tmp_path):
     hits = {r.vec_id for r in got if r.cos_sim == 1.0}
     assert new_rows[7][0] in hits
     # the index now serves both generations
-    n_codes = spark.read.parquet(path + "/codes").select("vec_id").distinct().count()
+    n_codes = (
+        Engine.index_table(spark, path, "codes").read()
+        .select("vec_id").distinct().count()
+    )
     assert n_codes == 250
 
 
 def test_minhash_index_remove_tombstone_and_compact(spark, tmp_path):
-    """Retraction lifecycle: tombstoned docs vanish from the band
-    reader AND from near_dup_pairs_against_index (no pairs against
-    removed docs); compaction physically rewrites bands/arrays to the
-    same live rows and clears the tombstone set."""
-    import os
-
+    """Retraction lifecycle: removed docs vanish from the band reader
+    AND from near_dup_pairs_against_index (no pairs against removed
+    docs); compaction physically rewrites the bands/arrays tables to
+    the same live rows and leaves no pending deletes."""
     from iceberg_twist_spark.api import Engine
 
     base = " ".join(f"w{i}" for i in range(40))
@@ -811,7 +813,7 @@ def test_minhash_index_remove_tombstone_and_compact(spark, tmp_path):
     }
     assert (1, 10) in before
 
-    # ...and not after doc 1 is tombstoned
+    # ...and not after doc 1 is removed
     Engine.minhash_index_remove(spark, path, [1])
     after = {
         (r.doc_a, r.doc_b)
@@ -827,32 +829,30 @@ def test_minhash_index_remove_tombstone_and_compact(spark, tmp_path):
     }
     assert live_ts == {2, 3}
 
-    # compaction: same live rows, physically, tombstones cleared
+    # compaction: same live rows, physically, no pending deletes
     Engine.minhash_index_compact(spark, path)
-    assert not os.path.isdir(path + "/tombstones")
-    raw = {
-        r.doc_id
-        for r in spark.read.parquet(path + "/bands")
-        .select("doc_id").distinct().collect()
-    }
-    assert raw == {2, 3}
-    raw_arrs = {
-        r.doc_id
-        for r in spark.read.parquet(path + "/arrays")
-        .select("doc_id").distinct().collect()
-    }
-    assert raw_arrs == {2, 3}
-    # compact with no tombstones is a no-op
+    for name in ("bands", "arrays"):
+        head = Engine.index_table(spark, path, name).snapshots()[-1]
+        assert head["operation"] == "rewrite" and head["eq_deletes"] == []
+        raw = {
+            r.doc_id
+            for r in spark.read.parquet(*head["files"])
+            .select("doc_id").distinct().collect()
+        }
+        assert raw == {2, 3}, name
+    # compact with no pending deletes is a no-op
+    bands = Engine.index_table(spark, path, "bands")
+    head_id = bands.current_snapshot_id()
     assert Engine.minhash_index_compact(spark, path) == path
+    assert bands.current_snapshot_id() == head_id
 
 
 def test_pq_index_remove_tombstone_matches_compact(spark, tmp_path):
     """PQ retraction: a removed vector stops being servable (its
     codes leave the ADC scan, its raw vector leaves the re-rank) —
-    identically under the tombstone read path and after physical
+    identically under the merge-on-read path and after physical
     compaction; the frozen codebook is untouched by either."""
     import math
-    import os
 
     from iceberg_twist_spark.api import Engine
 
@@ -880,23 +880,31 @@ def test_pq_index_remove_tombstone_matches_compact(spark, tmp_path):
     assert all(v not in (7, 11) for v, _ in ts_rows)
 
     Engine.pq_index_compact(spark, path)
-    assert not os.path.isdir(path + "/tombstones")
+    heads = {
+        name: Engine.index_table(spark, path, name).snapshots()[-1]
+        for name in ("codes", "vectors")
+    }
+    assert all(h["eq_deletes"] == [] for h in heads.values())
     compact_rows = [
         (r.vec_id, r.cos_sim)
         for r in Engine.pq_ann_search(spark, path, probe, k=120).collect()
     ]
     assert compact_rows == ts_rows
     assert spark.read.parquet(path + "/codebook").count() == cb_before
-    raw = {r.vec_id for r in spark.read.parquet(path + "/vectors").collect()}
+    raw = {
+        r.vec_id
+        for r in spark.read.parquet(*heads["vectors"]["files"]).collect()
+    }
     assert 7 not in raw and 11 not in raw and len(raw) == 118
 
 
 def test_ann_index_remove_rewrites_only_hit_clusters(spark, tmp_path):
-    """IVF retraction: tombstoned vectors leave ann_search results;
-    compaction rewrites ONLY the cluster partitions containing them
-    (witnessed by partition file mtimes) and clears the set."""
+    """IVF retraction: removed vectors leave ann_search results;
+    compaction rewrites ONLY the cluster files containing them (every
+    other cluster's files are carried into the new manifest unchanged)
+    and leaves no pending deletes."""
     import math
-    import os
+    import re
 
     from iceberg_twist_spark.api import Engine
 
@@ -916,17 +924,21 @@ def test_ann_index_remove_rewrites_only_hit_clusters(spark, tmp_path):
         r.vec_id == 42
         for r in Engine.ann_search(spark, path, probe, k=5, nprobe=8).collect()
     )
-    # the cluster holding vec 42, and a snapshot of every partition's
-    # newest mtime before the compact
-    idx = spark.read.parquet(path)
+    # the cluster holding vec 42, and every cluster's files before the
+    # compact
+    rows = Engine.index_table(spark, path)
+    idx = rows.read()
     hit_cluster = idx.filter(idx.vec_id == 42).select("cluster").head()[0]
-    parts = [d for d in os.listdir(path) if d.startswith("cluster=")]
 
-    def newest(d):
-        p = os.path.join(path, d)
-        return max(os.path.getmtime(os.path.join(p, f)) for f in os.listdir(p))
+    def files_by_cluster():
+        out = {}
+        for f in rows.plan_files():
+            c = int(re.search(r"/cluster=(\d+)/", f).group(1))
+            out.setdefault(c, set()).add(f)
+        return out
 
-    mtimes = {d: newest(d) for d in parts}
+    before = files_by_cluster()
+    assert len(before) == 8
 
     Engine.ann_index_remove(spark, path, [42])
     got = {
@@ -936,16 +948,17 @@ def test_ann_index_remove_rewrites_only_hit_clusters(spark, tmp_path):
     assert 42 not in got and len(got) == 199
 
     Engine.ann_index_compact(spark, path)
-    assert not os.path.isdir(path.rstrip("/") + "_tombstones")
+    assert rows.snapshots()[-1]["eq_deletes"] == []
     got2 = {
         r.vec_id
         for r in Engine.ann_search(spark, path, probe, k=200, nprobe=8).collect()
     }
     assert got2 == got
-    for d in parts:
-        changed = newest(d) != mtimes[d]
-        assert changed == (d == f"cluster={hit_cluster}"), (
-            f"{d}: rewritten={changed}, expected only cluster={hit_cluster}"
+    after = files_by_cluster()
+    for c in before:
+        changed = after.get(c) != before[c]
+        assert changed == (c == hit_cluster), (
+            f"cluster={c}: rewritten={changed}, expected only cluster={hit_cluster}"
         )
 
 
@@ -1033,7 +1046,8 @@ def test_readme_daily_ingest_recipe(spark, sf_dir, tmp_path):
     assert kept_ids == {101, 102}
     banded = {
         r.doc_id
-        for r in spark.read.parquet(ns["idx"] + "/bands").select("doc_id").distinct().collect()
+        for r in Engine.read_minhash_bands(spark, ns["idx"])
+        .select("doc_id").distinct().collect()
     }
     assert 101 in banded and 102 in banded
     assert 100 not in banded and 103 not in banded
@@ -1089,17 +1103,18 @@ def test_index_geometry_and_tau_guards(spark, tmp_path):
     Engine.near_dup_pairs_against_index(batch, "text", "doc_id", idx, tau=0.95).collect()
 
 
-def test_compact_staging_is_hidden_and_swept(spark, tmp_path):
-    """r9 advice: _swap_rewrite used to stage 'cluster=N.compact_tmp'
-    INSIDE the partitioned IVF dataset root — a crash mid-compact left
-    a directory parquet partition discovery parsed as a bogus cluster
-    value, breaking every later read. Staging dirs are now DOT-
-    prefixed (ignored by discovery), and the compact entry points
-    sweep any leftover debris before reading."""
+def test_interrupted_index_compaction_changes_nothing(spark, tmp_path, monkeypatch):
+    """An index compaction that dies after writing its data files but
+    before the version-hint swap (the commit point) changes nothing a
+    reader sees: every index reader returns the pre-compaction rows,
+    and remove_orphan_files deletes exactly the files it wrote."""
     import math
     import os
 
+    import pytest
+
     from iceberg_twist_spark.api import Engine
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
 
     def vec(i):
         return [
@@ -1107,52 +1122,68 @@ def test_compact_staging_is_hidden_and_swept(spark, tmp_path):
             for d in range(16)
         ]
 
-    rows = [(i, vec(i)) for i in range(100)]
-    df = spark.createDataFrame(rows, "id long, v array<float>")
-    path = Engine.build_ann_index(
-        df, "v", "id", str(tmp_path / "ivfc"), n_clusters=4
+    vecs = spark.createDataFrame(
+        [(i, vec(i)) for i in range(120)], "id long, v array<float>"
     )
-    n_before = spark.read.parquet(path).count()
-    # plant crash debris exactly where _swap_rewrite stages it
-    debris = os.path.join(path, ".cluster=0.compact_tmp")
-    df.limit(3).select("id", "v").write.mode("overwrite").parquet(debris)
-    # hidden dir: partition discovery must ignore it entirely
-    assert spark.read.parquet(path).count() == n_before
-    assert "cluster=0.compact_tmp" not in {
-        r.cluster for r in
-        spark.read.parquet(path).select("cluster").distinct().collect()
-    }
-    # a compact pass sweeps the leftover and still works
-    Engine.ann_index_remove(spark, path, [5])
-    Engine.ann_index_compact(spark, path)
-    assert not os.path.isdir(debris)
-    assert spark.read.parquet(path).count() == n_before - 1
+    texts = [(i, " ".join(f"w{(i * 7 + j) % 23}" for j in range(30))) for i in range(20)]
+    docs = spark.createDataFrame(texts, "k long, text string")
+    # copies of a removed doc (1) and of a live one (3)
+    batch = spark.createDataFrame(
+        [(100, texts[1][1]), (103, texts[3][1])], "k long, text string"
+    )
+    mh = Engine.build_minhash_index(docs, "text", "k", str(tmp_path / "mh"))
+    pq = Engine.build_pq_ann_index(vecs, "v", "id", str(tmp_path / "pq"))
+    ivf = Engine.build_ann_index(vecs, "v", "id", str(tmp_path / "ivf"), n_clusters=4)
+    Engine.minhash_index_remove(spark, mh, [1, 2])
+    Engine.pq_index_remove(spark, pq, [7, 11])
+    Engine.ann_index_remove(spark, ivf, [5, 42])
+    probe = [float(x) for x in vec(3)]
 
+    def reads():
+        return (
+            sorted(map(tuple, Engine.read_minhash_bands(spark, mh).collect())),
+            sorted(map(tuple, Engine.near_dup_pairs_against_index(
+                batch, "text", "k", mh
+            ).collect())),
+            Engine.pq_ann_search(spark, pq, probe, k=120).collect(),
+            Engine.ann_search(spark, ivf, probe, k=120, nprobe=4).collect(),
+        )
 
-def test_compact_debris_sweep_recovers_mid_swap_crash(spark, tmp_path):
-    """r10 advice: a crash between _swap_rewrite's two renames leaves
-    the target ABSENT and .compact_old holding the ONLY copy; the
-    debris sweep must RESTORE it (rename back), not rmtree it into
-    permanent data loss. Superseded .compact_old dirs (target present)
-    and .compact_tmp dirs remain plain debris."""
-    import os
+    tables = [Engine.index_table(spark, mh, n) for n in ("bands", "arrays")]
+    tables += [Engine.index_table(spark, pq, n) for n in ("codes", "vectors")]
+    tables.append(Engine.index_table(spark, ivf))
 
-    from iceberg_twist_spark.api import Engine
+    def data_files(t):
+        return {
+            os.path.join(root, f)
+            for root, _, names in os.walk(os.path.join(t.path, "data"))
+            for f in names
+            if f.endswith(".parquet")
+        }
 
-    root = str(tmp_path / "ds")
-    target = os.path.join(root, "part")
-    spark.range(10).write.parquet(target)
-    # simulate the mid-swap crash window: target renamed aside, tmp
-    # (complete but unswapped) still present
-    os.rename(target, os.path.join(root, ".part.compact_old"))
-    os.makedirs(os.path.join(root, ".part.compact_tmp"))
-    Engine._sweep_compact_debris(root)
-    assert os.path.isdir(target), "only copy of the data was swept"
-    assert spark.read.parquet(target).count() == 10
-    assert not os.path.isdir(os.path.join(root, ".part.compact_old"))
-    assert not os.path.isdir(os.path.join(root, ".part.compact_tmp"))
-    # target present → .compact_old is superseded debris, swept clean
-    os.makedirs(os.path.join(root, ".part.compact_old"))
-    Engine._sweep_compact_debris(root)
-    assert not os.path.isdir(os.path.join(root, ".part.compact_old"))
-    assert spark.read.parquet(target).count() == 10
+    before_reads = reads()
+    before_files = [data_files(t) for t in tables]
+    before_heads = [t.current_snapshot_id() for t in tables]
+
+    def crash(self, snap):
+        raise RuntimeError("crash before the pointer swap")
+
+    monkeypatch.setattr(SnapshotTable, "_swap_hint", crash)
+    for compact, path in (
+        (Engine.minhash_index_compact, mh),
+        (Engine.pq_index_compact, pq),
+        (Engine.ann_index_compact, ivf),
+    ):
+        with pytest.raises(RuntimeError, match="pointer swap"):
+            compact(spark, path)
+    monkeypatch.undo()
+
+    assert [t.current_snapshot_id() for t in tables] == before_heads
+    assert reads() == before_reads
+    written = [data_files(t) - b for t, b in zip(tables, before_files)]
+    # each compaction died on its first table, after writing its files
+    assert [bool(w) for w in written] == [True, False, True, False, True]
+    for t, w, b in zip(tables, written, before_files):
+        assert t.remove_orphan_files() == len(w)
+        assert data_files(t) == b
+    assert reads() == before_reads

@@ -731,15 +731,17 @@ def test_long_append_history_plans_single_scan(spark, tmp_path):
     assert plan.count("Scan parquet") == 1, plan
     assert "Union" not in plan, plan
     assert df.count() == 80
-    # one eq-delete splits the files into exactly TWO seq-scoped
-    # groups (pre-delete files take the anti-join, the post-delete
-    # append reads plain) — not eight
+    # eq-deletes interleaved with appends keep ONE data scan plus ONE
+    # delete-key scan: the anti-join compares each row's file sequence
+    # number with each delete's, so no per-vintage split is needed
     tbl.delete_keys(spark.createDataFrame([(5,)], "id long"), "id")
     tbl.append(spark.range(80, 90).selectExpr("id", "id * 2 AS v"))
+    tbl.delete_keys(spark.createDataFrame([(85,)], "id long"), "id")
+    tbl.append(spark.range(90, 100).selectExpr("id", "id * 2 AS v"))
     df2 = tbl.read()
     plan2 = df2._jdf.queryExecution().executedPlan().toString()
-    assert plan2.count("Scan parquet") == 3, plan2  # 2 data groups + delete keys
-    assert df2.count() == 89
+    assert plan2.count("Scan parquet") == 2, plan2  # data + delete keys
+    assert df2.count() == 98
 
 
 def test_delete_where_rewrites_only_matching_files(spark, tmp_path):
@@ -910,6 +912,78 @@ def test_row_count_serves_from_metadata(spark, tmp_path):
     assert tbl.row_count(s1) == tbl.read(snapshot_id=s1).count() == 20
     assert tbl.row_count(s2) == tbl.read(snapshot_id=s2).count() == 50
     assert tbl.row_count(s3) == tbl.row_count() == tbl.read().count() == 70
+
+
+def test_append_counts_rows_from_footers(spark, tmp_path):
+    """A commit's n_records comes from the row counts it already reads
+    from each new file's parquet footer: it equals read().count() after
+    an unpartitioned and a partitioned append, and appending a small
+    frame runs no more Spark jobs than a bare parquet write of the
+    same frame (no read-back count)."""
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+    df = spark.range(40).selectExpr("id", "CAST(id % 3 AS STRING) AS p")
+    tables = []
+    for name, spec in (("plain", None), ("part", ["p"])):
+        tbl = SnapshotTable(spark, str(tmp_path / name))
+        tbl.create(df.filter("id < 10"))
+        if spec:
+            tbl.set_partition_spec(spec)
+        sid = tbl.append(df.filter("id >= 10"))
+        assert tbl._manifest(sid)["n_records"] == tbl.read().count() == 40
+        tables.append(tbl)
+
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(fn) -> int:
+        group = f"footer-rows-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    bare = jobs(lambda: df.write.parquet(str(tmp_path / "bare")))
+    for tbl in tables:
+        assert jobs(lambda t=tbl: t.append(df)) <= bare
+
+
+def test_apply_deletes_rewrites_only_hit_files(spark, tmp_path):
+    """apply_deletes: only the data files that pending equality and
+    position deletes remove rows from are rewritten; every other file
+    (including a newer file re-inserting a deleted key, which the
+    sequence-scoped delete must not touch) carries over unchanged; the
+    live rows are unchanged and no delete is left pending."""
+    from pyspark.sql import functions as F
+
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+    tbl = SnapshotTable(spark, str(tmp_path / "apply"))
+    s1 = tbl.create(spark.range(40).selectExpr("id", "id % 4 AS g").repartition(4))
+    hit = {
+        SnapshotTable._norm_uri(r._file_path)
+        for r in tbl.read(snapshot_id=s1, keep_meta=True)
+        .filter(F.col("id").isin(5, 7))
+        .collect()
+    }
+    tbl.delete_keys(spark.createDataFrame([(5,)], "id long"), "id")
+    tbl.append(spark.createDataFrame([(5, 99)], "id long, g long"))
+    tbl.delete_where_positional(F.col("id") == 7)
+    before = set(tbl.plan_files())
+    live = sorted(tbl.read().collect())
+    sid = tbl.apply_deletes()
+    m = tbl._manifest(sid)
+    assert m["operation"] == "rewrite"
+    assert m["eq_deletes"] == [] and m["pos_deletes"] == []
+    assert before - set(m["files"]) == hit
+    assert sorted(tbl.read().collect()) == live
+    assert (5, 99) in {tuple(r) for r in live}
+    assert tbl.row_count() == len(live) == 39
+    assert tbl.apply_deletes() == sid  # nothing pending: no commit
 
 
 def test_commit_conflict_detection(spark, tmp_path):
@@ -1252,7 +1326,7 @@ def test_merge_not_matched_by_source_clauses(spark, tmp_path):
     assert final == {i: i * 7 for i in range(10, 20)}
 
 
-def test_mor_query_equivalence(spark):
+def test_mor_query_equivalence(spark, sf_dir):
     """The invariants q_iceberg_mor_delete / _mor_pos_delete asserted
     in-plan until r12 (every bench run paid ~4 extra full scans + two
     exceptAll shuffles for them): time travel to the pre-delete
@@ -1263,7 +1337,6 @@ def test_mor_query_equivalence(spark):
         _pos_delete_table,
     )
 
-    sf_dir = "/root/testdata/sf0.001"
     for build in (_mor_table, _pos_delete_table):
         tbl = build(spark, sf_dir)
         assert tbl.read(snapshot_id=1).count() > tbl.read(snapshot_id=2).count()

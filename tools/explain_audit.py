@@ -404,12 +404,6 @@ ENUM_WINDOW_ALLOWED: dict[str, str] = {}
 # fails, so the list cannot rot.
 BROADCAST_BOUNDED: dict[str, dict[str, str]] = {
     "api.py": {
-        "ts": "index tombstone set (takedown keys — bounded by design: "
-        "the documented contract is that a tombstone set outgrowing a "
-        "broadcast means the compact pass is overdue; "
-        "Engine._without_tombstones)",
-        "keys": "normalized takedown key set (same bound as the "
-        "tombstone set it feeds — ann_index_compact)",
         "bench_grams": "benchmark/eval n-gram set (MBs by design — eval "
         "sets are fixed even when the corpus is 100 TB; documented in "
         "Engine.decontaminate)",
@@ -463,7 +457,9 @@ BROADCAST_BOUNDED: dict[str, dict[str, str]] = {
         "ordinals): O(|deleted rows|) by the delete-commit contract — "
         "a delete set rivaling the table would be a copy-on-write "
         "rewrite instead (delete_keys/delete_where_positional "
-        "docstrings; compaction applies and clears them)",
+        "docstrings; compaction applies and clears them). The Engine "
+        "index removes are delete_keys on the index tables: takedown "
+        "sets, bounded the same way",
     },
     "operators/sketches.py": {
         "truth": "per-event-type exact counts (fixed enum cardinality)",
