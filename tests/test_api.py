@@ -1103,6 +1103,133 @@ def test_index_geometry_and_tau_guards(spark, tmp_path):
     Engine.near_dup_pairs_against_index(batch, "text", "doc_id", idx, tau=0.95).collect()
 
 
+def test_compact_staging_is_hidden_and_swept(spark, tmp_path, monkeypatch):
+    """The IVF table is partitioned by cluster, so the files a crashed
+    compaction staged sit beside the live cluster files. Readers go by
+    the manifest, never by directory discovery: the staged files show
+    up in no read (no extra rows, no bogus cluster value), a later
+    compaction still commits, and remove_orphan_files sweeps exactly
+    the staged files."""
+    import math
+    import os
+
+    import pytest
+
+    from iceberg_twist_spark.api import Engine
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+    def vec(i):
+        return [
+            math.cos(0.13 * d * (1 + i % 7)) + 0.03 * ((i * 17 + d * 5) % 71)
+            for d in range(16)
+        ]
+
+    rows = [(i, vec(i)) for i in range(100)]
+    df = spark.createDataFrame(rows, "id long, v array<float>")
+    path = Engine.build_ann_index(
+        df, "v", "id", str(tmp_path / "ivfc"), n_clusters=4
+    )
+    table = Engine.index_table(spark, path)
+
+    def data_files():
+        return {
+            os.path.join(root, f)
+            for root, _, names in os.walk(table._data)
+            for f in names
+            if f.endswith(".parquet")
+        }
+
+    def clusters():
+        return {r.cluster for r in table.read().select("cluster").distinct().collect()}
+
+    n_before = table.read().count()
+    clusters_before = clusters()
+    Engine.ann_index_remove(spark, path, [5])
+    files_before = data_files()
+
+    def crash(self, snap):
+        raise RuntimeError("crash before the pointer swap")
+
+    monkeypatch.setattr(SnapshotTable, "_swap_hint", crash)
+    with pytest.raises(RuntimeError, match="pointer swap"):
+        Engine.ann_index_compact(spark, path)
+    monkeypatch.undo()
+
+    staged = data_files() - files_before
+    assert staged, "the crashed compaction wrote no files"
+    # staged files sit inside the cluster-partitioned data dir, hidden
+    assert table.read().count() == n_before - 1
+    assert clusters() == clusters_before
+    got = Engine.ann_search(spark, path, [float(x) for x in vec(3)], k=3).collect()
+    assert got[0].vec_id == 3
+    # a later compaction commits over the debris, then the sweep
+    Engine.ann_index_compact(spark, path)
+    head = table.snapshots()[-1]
+    assert head["operation"] == "rewrite" and head["eq_deletes"] == []
+    assert table.remove_orphan_files() == len(staged)
+    assert not staged & data_files()
+    assert table.read().count() == n_before - 1
+    assert 5 not in {r.vec_id for r in table.read().select("vec_id").collect()}
+
+
+def test_compact_debris_sweep_recovers_mid_swap_crash(spark, tmp_path, monkeypatch):
+    """A compaction that dies at its commit point loses no data: the
+    table stays on its previous snapshot with every row readable, the
+    failed commit leaves no manifest behind, and re-running the
+    compaction lands the same rows a compaction that never crashed
+    commits, chained onto the pre-crash head."""
+    import os
+
+    import pytest
+
+    from iceberg_twist_spark.api import Engine
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+    texts = [(i, " ".join(f"w{(i * 7 + j) % 23}" for j in range(30))) for i in range(20)]
+    docs = spark.createDataFrame(texts, "k long, text string")
+    crashed = Engine.build_minhash_index(docs, "text", "k", str(tmp_path / "crashed"))
+    clean = Engine.build_minhash_index(docs, "text", "k", str(tmp_path / "clean"))
+    for path in (crashed, clean):
+        Engine.minhash_index_remove(spark, path, [1, 2])
+    Engine.minhash_index_compact(spark, clean)
+
+    tables = [Engine.index_table(spark, crashed, n) for n in ("bands", "arrays")]
+    heads = [t.current_snapshot_id() for t in tables]
+
+    def content(path, name):
+        return sorted(map(tuple, Engine.index_table(spark, path, name).read().collect()))
+
+    def manifests(t):
+        return {f for f in os.listdir(t._meta) if f.endswith(".json")}
+
+    before = [content(crashed, n) for n in ("bands", "arrays")]
+    manifests_before = [manifests(t) for t in tables]
+
+    def crash(self, snap):
+        raise RuntimeError("crash before the pointer swap")
+
+    monkeypatch.setattr(SnapshotTable, "_swap_hint", crash)
+    with pytest.raises(RuntimeError, match="pointer swap"):
+        Engine.minhash_index_compact(spark, crashed)
+    monkeypatch.undo()
+
+    assert [t.current_snapshot_id() for t in tables] == heads
+    assert [content(crashed, n) for n in ("bands", "arrays")] == before
+    assert [manifests(t) for t in tables] == manifests_before
+
+    # recovery is a plain re-run
+    Engine.minhash_index_compact(spark, crashed)
+    for t, h in zip(tables, heads):
+        head = t.snapshots()[-1]
+        assert head["operation"] == "rewrite" and head["eq_deletes"] == []
+        assert head["parent_id"] == h
+    for name in ("bands", "arrays"):
+        assert content(crashed, name) == content(clean, name)
+    assert {
+        r.doc_id for r in Engine.read_minhash_bands(spark, crashed).collect()
+    } == set(range(20)) - {1, 2}
+
+
 def test_interrupted_index_compaction_changes_nothing(spark, tmp_path, monkeypatch):
     """An index compaction that dies after writing its data files but
     before the version-hint swap (the commit point) changes nothing a
