@@ -320,6 +320,56 @@ def trips_band_gate(best: float, limit: float, obs: float) -> bool:
     return best > limit * gate_load_factor(obs)
 
 
+def band_gate_verdict(
+    name: str, best: float, limit: float, obs: float
+) -> tuple[str | None, str | None]:
+    """(load warning, regression) for a best-of-N over its raw limit,
+    given the sentinel reading ``obs``. The warning is given only when
+    the query passes by the load factor alone; a query that trips gets
+    the regression text and no warning."""
+    factor = gate_load_factor(obs)
+    if trips_band_gate(best, limit, obs):
+        return None, (
+            f"best-of-N {best}s > band limit "
+            f"{round(limit, 2)}s × load factor {round(factor, 2)} "
+            f"(sentinel {obs}s vs {SENTINEL_REF_S}s quiet ref, "
+            f"cap {GATE_LOAD_FACTOR_CAP}; "
+            f"observed band {TIME_BANDS_SF01[name]})"
+        )
+    if factor > QUIET_FACTOR:
+        return (
+            f"{name} passed its raw band limit only under load "
+            f"(sentinel {obs}s = {factor:.2f}x quiet ref, capped at "
+            f"{GATE_LOAD_FACTOR_CAP}) — confirming re-run queued"
+        ), None
+    return None, None
+
+
+def confirm_verdict(
+    name: str, best: float, limit: float, obs: float, kept: str | None
+) -> str | None:
+    """Regression text after the confirming re-run, or None. ``best``
+    already includes the re-run and ``kept`` is the in-loop regression.
+    A quiet confirm decides: still over the raw limit trips, inside it
+    clears. A loaded confirm keeps the in-loop decision, restated with
+    the post-confirm best."""
+    if gate_load_factor(obs) <= QUIET_FACTOR:
+        if best > limit:
+            return (
+                f"quiet confirm run (sentinel {obs}s) still over the "
+                f"raw band limit: best {best}s > {round(limit, 2)}s "
+                f"(observed band {TIME_BANDS_SF01[name]})"
+            )
+        return None  # weather, confirmed
+    if kept is None:
+        return None
+    return (
+        f"in-loop trip kept: confirm run under load (sentinel {obs}s); "
+        f"best-of-N now {best}s vs band limit {round(limit, 2)}s "
+        f"(observed band {TIME_BANDS_SF01[name]})"
+    )
+
+
 def _sentinel(spark) -> float:
     best = float("inf")
     for _ in range(2):
@@ -441,22 +491,13 @@ def main() -> int:
             # stages (a ~KB final-agg exchange) to the next query
             factor = gate_load_factor(obs)
             sentinels[name] = {"obs": obs, "factor": round(factor, 2)}
-            if factor > QUIET_FACTOR:
-                print(
-                    f"# WARNING: {name} passed its raw band limit only "
-                    f"under load (sentinel {obs}s = {factor:.2f}x quiet "
-                    "ref, capped at "
-                    f"{GATE_LOAD_FACTOR_CAP}) — confirming re-run queued",
-                    file=sys.stderr,
-                )
-            if trips_band_gate(timings[name], limit, obs):
-                time_regressions[name] = (
-                    f"best-of-N {timings[name]}s > band limit "
-                    f"{round(limit, 2)}s × load factor {round(factor, 2)} "
-                    f"(sentinel {obs}s vs {SENTINEL_REF_S}s quiet ref, "
-                    f"cap {GATE_LOAD_FACTOR_CAP}; "
-                    f"observed band {TIME_BANDS_SF01[name]})"
-                )
+            warning, regression = band_gate_verdict(
+                name, timings[name], limit, obs
+            )
+            if warning:
+                print(f"# WARNING: {warning}", file=sys.stderr)
+            if regression:
+                time_regressions[name] = regression
         print(
             f"# {name}: {timings[name]:.3f}s best-of-{len(per_run)} "
             f"(runs={[round(t, 3) for t in per_run]}, {n} rows, "
@@ -476,7 +517,8 @@ def main() -> int:
     # the reported best-of-N (still a raw timing). Decision on the
     # confirm: quiet machine + inside the raw limit → weather, clear
     # any trip; quiet machine + still over → regression, trip; loaded
-    # machine → keep whatever the in-loop decision was (conservative).
+    # machine → keep whatever the in-loop decision was (conservative),
+    # restated with the post-confirm best.
     for name in [n for n in sentinels]:
         limit = time_limit(name)
         if limit is None or timings[name] <= limit:
@@ -493,16 +535,13 @@ def main() -> int:
         timings[name] = round(min(timings[name], confirm), 3)
         sentinels[name]["confirm_obs"] = obs
         sentinels[name]["confirm_s"] = round(confirm, 3)
-        if gate_load_factor(obs) <= QUIET_FACTOR:
-            if timings[name] > limit:
-                time_regressions[name] = (
-                    f"quiet confirm run (sentinel {obs}s) still over the "
-                    f"raw band limit: best {timings[name]}s > "
-                    f"{round(limit, 2)}s "
-                    f"(observed band {TIME_BANDS_SF01[name]})"
-                )
-            else:
-                time_regressions.pop(name, None)  # weather, confirmed
+        regression = confirm_verdict(
+            name, timings[name], limit, obs, time_regressions.get(name)
+        )
+        if regression:
+            time_regressions[name] = regression
+        else:
+            time_regressions.pop(name, None)
         print(
             f"# confirm {name}: {confirm:.3f}s (sentinel {obs}s) -> "
             f"best {timings[name]:.3f}s",

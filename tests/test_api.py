@@ -241,6 +241,22 @@ def test_profile_matches_registered(spark, sf_dir):
     }
 
 
+def test_profile_refuses_non_double_numeric_column(spark, sf_dir, tmp_path):
+    """The profile stacks its numeric columns as double; a numeric
+    column of any other type (here decimal) raises instead of being
+    rounded through the cast."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from iceberg_twist_spark.registry import REGISTRY
+
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").withColumn(
+        "l_quantity", F.col("l_quantity").cast("decimal(15,2)")
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    with pytest.raises(ValueError, match="l_quantity"):
+        REGISTRY["q_profile_table"].builder(spark, str(tmp_path))
+
+
 def test_ann_index_facade_matches_brute_force(spark, sf_dir):
     """build_ann_index + ann_search must return exactly the vectors a
     brute-force rescan of the probed clusters would — and the index

@@ -85,6 +85,35 @@ def test_band_gate_load_factor_is_capped():
     assert bench.trips_band_gate(1.01 * limit, limit, bench.SENTINEL_REF_S)
 
 
+def test_load_warning_only_when_the_query_passes():
+    # The "passed only under load" warning must not be printed for a
+    # query the gate then trips: the two messages contradict each other.
+    name = bench.HEADLINE[0]
+    limit = bench.time_limit(name)
+    loaded = 1.8 * bench.SENTINEL_REF_S
+    warning, regression = bench.band_gate_verdict(name, 1.5 * limit, limit, loaded)
+    assert warning and "only under load" in warning and regression is None
+    warning, regression = bench.band_gate_verdict(name, 2.5 * limit, limit, loaded)
+    assert warning is None and regression and "best-of-N" in regression
+
+
+def test_loaded_confirm_restates_kept_trip_with_post_confirm_best():
+    name = bench.HEADLINE[0]
+    limit = bench.time_limit(name)
+    before, after = round(3.0 * limit, 3), round(2.1 * limit, 3)
+    loaded = 3 * bench.SENTINEL_REF_S
+    _, kept = bench.band_gate_verdict(name, before, limit, loaded)
+    assert kept and f"{before}s" in kept
+    restated = bench.confirm_verdict(name, after, limit, loaded, kept)
+    assert restated and f"{after}s" in restated and f"{before}s" not in restated
+    # a loaded confirm never trips a query the loop passed...
+    assert bench.confirm_verdict(name, after, limit, loaded, None) is None
+    # ...and a quiet confirm decides on the raw limit alone
+    quiet = bench.SENTINEL_REF_S
+    assert bench.confirm_verdict(name, 0.9 * limit, limit, quiet, kept) is None
+    assert f"{after}s" in bench.confirm_verdict(name, after, limit, quiet, None)
+
+
 def test_headroom_for_future_headline_growth():
     # The contract line must survive a wider headline set than today's:
     # if it only just fits, the next added query breaks the driver again.

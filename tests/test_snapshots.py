@@ -126,6 +126,24 @@ def test_merge_updates_and_deletes_applied(spark, sf_dir):
     assert cur.filter(F.col("o_orderkey") % 11 == 5).count() == 0
 
 
+def test_merge_into_conditional_history_and_duplicate_keys(spark, sf_dir):
+    """The conditional-MERGE fixture commits exactly an overwrite then
+    one merge, and a MERGE whose source repeats a key raises ValueError
+    (cardinality violation) without committing anything."""
+    from iceberg_twist_spark.sources.snapshots import _merge_cond_table
+
+    tbl = _merge_cond_table(spark, sf_dir)
+    ops = [m["operation"] for m in tbl.snapshots()]
+    assert ops == ["overwrite", "merge"], ops
+    dup = spark.createDataFrame(
+        [(30, "S", 1.0), (30, "S", 2.0)],
+        "o_orderkey long, o_orderstatus string, o_totalprice double",
+    )
+    with pytest.raises(ValueError, match="cardinality"):
+        tbl.merge_into(dup, key="o_orderkey")
+    assert [m["operation"] for m in tbl.snapshots()] == ops
+
+
 def test_zone_map_pruning_skips_files(spark, sf_dir):
     """A narrow price band over the range-laid-out table must plan
     strictly fewer files than the full scan, and the pruned read must
