@@ -160,20 +160,60 @@ class Engine:
     # are unpartitioned tables under the index path; the IVF rows are
     # one table AT the index path, partitioned by ``cluster``. State
     # frozen at build time — banding ``meta``, PQ ``codebook``, IVF
-    # ``<path>_centroids`` — is plain parquet written once. The
-    # lifecycle verbs are the table's own: append is ``append``; remove
-    # is ``delete_keys`` (a merge-on-read equality delete — O(|keys|),
-    # honoured by every reader through one broadcast anti-join per
-    # table; takedown sets are tiny vs the corpus); compaction is
-    # ``rewrite_data_files`` (IVF: ``apply_deletes``, which rewrites
-    # only the cluster files holding removed vectors). Each commit
-    # lands at the table's atomic version-hint swap, so an interrupted
-    # compaction leaves the index as it was and ``remove_orphan_files``
-    # reclaims what it wrote. Compact per snapshot, delete between
-    # snapshots; a delete set outgrowing a broadcast is the signal the
-    # compaction is overdue.
+    # ``<path>_centroids`` — is a small Spark-written parquet file,
+    # written once and read on the driver (``_read_small_parquet``):
+    # values through pyarrow, and a DataFrame, where a plan needs one,
+    # under the Spark schema stored in the file's footer — so reading
+    # it runs no inference job and no ``head()``. Every call re-reads
+    # it, so a rebuilt index is always seen. The lifecycle verbs are
+    # the table's own: append is ``append``; remove is ``delete_keys``
+    # (a merge-on-read equality delete — O(|keys|), honoured by every
+    # reader through one broadcast anti-join per table; takedown sets
+    # are tiny vs the corpus); compaction is ``rewrite_data_files``
+    # (IVF: ``apply_deletes``, which rewrites only the cluster files
+    # holding removed vectors). Each commit lands at the table's atomic
+    # version-hint swap, so an interrupted compaction leaves the index
+    # as it was and ``remove_orphan_files`` reclaims what it wrote.
+    # Compact per snapshot, delete between snapshots; a delete set
+    # outgrowing a broadcast is the signal the compaction is overdue.
     _MINHASH_TABLES = ("bands", "arrays")
     _PQ_TABLES = ("codes", "vectors")
+
+    @staticmethod
+    def _read_small_parquet(spark: SparkSession, path: str, frame: bool = False):
+        """(Arrow table, DataFrame or None) of a small Spark-written
+        parquet dir, read on the driver. With ``frame=True`` the
+        DataFrame reads the same files under the schema Spark stored
+        in their footer, so building it runs no schema-inference job."""
+        import json
+
+        import pyarrow.parquet as pq
+        from pyspark.sql import types as T
+
+        table = pq.read_table(path)
+        if not frame:
+            return table, None
+        schema = T.StructType.fromJson(
+            json.loads(table.schema.metadata[b"org.apache.spark.sql.parquet.row.metadata"])
+        )
+        return table, spark.read.schema(schema).parquet(path)
+
+    @staticmethod
+    def _index_meta(spark: SparkSession, base: str) -> dict:
+        """A MinHash index's banding metadata (``n_bands``, ``tau``)."""
+        import json
+
+        table, _ = Engine._read_small_parquet(spark, base + "/meta")
+        return json.loads(table.column("meta")[0].as_py())
+
+    @staticmethod
+    def _pq_codebook(spark: SparkSession, base: str) -> tuple[DataFrame, int, int]:
+        """A PQ index's codebook frame and its geometry: ``n_sub`` is
+        ``max(m) + 1``, ``sub_dim`` the codeword width."""
+        import pyarrow.compute as pc
+
+        table, cb = Engine._read_small_parquet(spark, base + "/codebook", frame=True)
+        return cb, pc.max(table.column("m")).as_py() + 1, len(table.column("cw")[0])
 
     @staticmethod
     def index_table(spark: SparkSession, path: str, name: str | None = None):
@@ -253,8 +293,6 @@ class Engine:
         """Append a new batch's banding rows + shingle arrays to an
         existing ``build_minhash_index`` layout (band count read from
         the stored metadata — appends cannot drift from the build)."""
-        import json
-
         from iceberg_twist_spark.llm.dedup import (
             band_rows,
             minhash_signatures,
@@ -263,7 +301,7 @@ class Engine:
 
         sp = df.sparkSession
         base = path.rstrip("/")
-        meta = json.loads(sp.read.parquet(base + "/meta").head()[0])
+        meta = Engine._index_meta(sp, base)
         docs = df.select(
             F.col(key_col).alias("doc_id"), F.col(text_col).alias("text")
         )
@@ -331,8 +369,6 @@ class Engine:
         — the fixed-banding bug class). Querying with tau below
         ``meta['tau']`` raises instead of silently under-recalling;
         rebuild the index at the lower tau."""
-        import json
-
         from iceberg_twist_spark.llm.dedup import (
             _verify_jaccard_arrays,
             band_pairs_from_rows,
@@ -343,7 +379,7 @@ class Engine:
 
         base = path.rstrip("/")
         sp = df.sparkSession
-        meta = json.loads(sp.read.parquet(base + "/meta").head()[0])
+        meta = Engine._index_meta(sp, base)
         if tau is not None and tau < meta["tau"]:
             raise ValueError(
                 f"tau={tau} is below the index's build tau={meta['tau']}: "
@@ -627,8 +663,10 @@ class Engine:
         silently zip-truncate into wrong assignments)."""
         from iceberg_twist_spark.llm.similarity import ivf_assign, with_norm
 
-        centroids = df.sparkSession.read.parquet(path.rstrip("/") + "_centroids")
-        cdim = len(centroids.select("embedding").head()[0])
+        cent, centroids = Engine._read_small_parquet(
+            df.sparkSession, path.rstrip("/") + "_centroids", frame=True
+        )
+        cdim = len(cent.column("embedding")[0])
         emb = with_norm(
             df.select(F.col(key_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
             "embedding",
@@ -659,7 +697,9 @@ class Engine:
         from iceberg_twist_spark.llm.similarity import _dot, _norm
 
         p = F.array(*[F.lit(float(x)) for x in probe])
-        cent = spark.read.parquet(path.rstrip("/") + "_centroids")
+        _, cent = Engine._read_small_parquet(
+            spark, path.rstrip("/") + "_centroids", frame=True
+        )
         csim = r4(_dot(F.col("embedding"), p) / (F.col("nrm") * _norm(p)))
         cids = [
             r.cid
@@ -744,9 +784,7 @@ class Engine:
         from iceberg_twist_spark.llm import similarity as S
 
         base = path.rstrip("/")
-        cb = df.sparkSession.read.parquet(base + "/codebook")
-        sub_dim = len(cb.select("cw").head()[0])
-        n_sub = cb.agg(F.max("m")).head()[0] + 1
+        cb, n_sub, sub_dim = Engine._pq_codebook(df.sparkSession, base)
         emb = df.select(
             F.col(key_col).alias("vec_id"), F.col(vec_col).alias("embedding")
         )
@@ -839,7 +877,7 @@ class Engine:
         from iceberg_twist_spark.llm import similarity as S
 
         base = path.rstrip("/")
-        cb = spark.read.parquet(base + "/codebook")
+        cb, n_sub, sub_dim = Engine._pq_codebook(spark, base)
         codes = Engine.index_table(spark, base, "codes").read()
         vectors = Engine.index_table(spark, base, "vectors").read()
         p = F.array(*[F.lit(float(x)) for x in probe])
@@ -847,8 +885,6 @@ class Engine:
         # (sub_dim = codeword width) so the LUT matches the encode; a
         # wrong-width probe would be silently sliced into wrong LUT
         # entries, so validate rather than mis-rank
-        sub_dim = len(cb.select("cw").head()[0])
-        n_sub = cb.agg(F.max("m")).head()[0] + 1
         if len(probe) != n_sub * sub_dim:
             raise ValueError(
                 f"probe dim {len(probe)} does not match the index geometry "

@@ -1008,6 +1008,32 @@ FROM subbed c LEFT JOIN dropped d ON c.vec_id = d.vec_id
 """
 
 
+def _cell_hits(mat, nrm, tau: float, block: int = 512):
+    """Row i is a hit when some row j < i has r4(cos) ≥ ``tau``; rows
+    are sorted by id. The pair cosines are computed in ``block`` ×
+    ``block`` tiles over the lower triangle only, so memory is bounded
+    by one tile, not by the cell. Each cosine is the same ordered-IEEE
+    fold whatever the tiling: dot accumulates dims ascending, then
+    divides by the norm product and r4-rounds before the τ gate."""
+    import numpy as np
+
+    n = mat.shape[0]
+    hit = np.zeros(n, dtype=bool)
+    for i0 in range(0, n, block):
+        rows = slice(i0, min(i0 + block, n))
+        ri = np.arange(i0, rows.stop)
+        for j0 in range(0, rows.stop - 1, block):
+            cols = slice(j0, min(j0 + block, rows.stop - 1))
+            dot = np.zeros((rows.stop - i0, cols.stop - j0))
+            for k in range(mat.shape[1]):
+                dot += mat[rows, k, None] * mat[None, cols, k]
+            sims = dot / (nrm[rows, None] * nrm[None, cols])
+            sims = np.floor(sims * 10000.0 + 0.5) / 10000.0
+            below = np.arange(j0, cols.stop)[None, :] < ri[:, None]
+            hit[rows] |= np.any((sims >= tau) & below, axis=1)
+    return hit
+
+
 @register("q_llm_semdedup_capped", oracle=_SEMDEDUP_CAPPED_ORACLE, tags=("llm", "dedup", "similarity"))
 def q_llm_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with an UNCONDITIONAL candidate bound: clusters larger
@@ -1036,14 +1062,16 @@ def q_llm_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel, through Arrow): at the 100k-vector corpus twin that is
     # ~13 GB of pair payload vs ~30 MB of row payload here — measured
     # 11.3 s (HOF) / 12.0 s (pair kernel) / 4.4 s (this form), same
-    # dropped set on all three. Per-group memory is bounded by
-    # construction: a cell is ≤ ~CAP rows (CAP·dim doubles). The
-    # uncapped q_llm_semdedup keeps the streaming pair kernel — a
-    # degenerate mega-cluster must not have to fit in one worker.
+    # dropped set on all three. A cell is ≤ ~CAP rows on dense ids,
+    # but sparse or skewed ids can pile a cluster into one sub-bucket,
+    # so the pair cosines are tiled (``_cell_hits``): per-group memory
+    # is the cell's rows plus one tile, never |cell|². The uncapped
+    # q_llm_semdedup keeps the streaming pair kernel — a degenerate
+    # mega-cluster must not have to fit in one worker.
     # Bit-compatibility: same ordered-IEEE scheme (dot accumulates
     # dims ascending; sims r4-round BEFORE the ≥ τ gate; a vector
-    # drops when ANY smaller-id cell-mate clears τ — np.tril(k=-1)
-    # over ids sorted ascending).
+    # drops when ANY smaller-id cell-mate clears τ, ids sorted
+    # ascending).
     import numpy as np
     import pandas as pd
 
@@ -1058,13 +1086,7 @@ def q_llm_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
              for e in pdf["embedding"].to_numpy()[order]]
         )
         nrm = pdf["nrm"].to_numpy()[order]
-        dot = np.zeros((n, n))
-        for k in range(mat.shape[1]):
-            dot += mat[:, k, None] * mat[None, :, k]
-        sims = dot / (nrm[:, None] * nrm[None, :])
-        sims = np.floor(sims * 10000.0 + 0.5) / 10000.0
-        hit = np.any(np.tril(sims >= SEMDEDUP_TAU, k=-1), axis=1)
-        return pd.DataFrame({"vec_id": ids[hit]})
+        return pd.DataFrame({"vec_id": ids[_cell_hits(mat, nrm, SEMDEDUP_TAU)]})
 
     dropped = (
         subbed.select("vec_id", "embedding", "nrm", "cluster", "sub")
@@ -1272,7 +1294,8 @@ def _pq_assign(
         for v in cw:
             c2 += v * v
         per_m.setdefault(int(r.m), []).append((int(r.code), cw, c2))
-    assert sorted(per_m) == list(range(len(per_m))), "non-contiguous m"
+    if sorted(per_m) != list(range(len(per_m))):
+        raise ValueError(f"codebook has non-contiguous m values: {sorted(per_m)}")
     cb_np: dict[int, tuple] = {}
     for m, entries in per_m.items():
         entries.sort()  # code-ascending: argmin's first-min = lowest code
@@ -1299,8 +1322,11 @@ def _pq_assign(
             m_col = batch.column(n_key).to_numpy(zero_copy_only=False)
             sv_arr = batch.column(n_key + 1)
             lens = np.diff(sv_arr.offsets.to_numpy(zero_copy_only=False))
-            d = int(lens[0]) if n else 0
-            assert (lens == d).all(), "ragged subvector widths"
+            d = int(lens[0])
+            if not (lens == d).all():
+                raise ValueError(
+                    f"ragged subvector widths: {sorted(set(lens.tolist()))}"
+                )
             sv = (
                 sv_arr.flatten()
                 .to_numpy(zero_copy_only=False)
@@ -1311,7 +1337,7 @@ def _pq_assign(
             sv2 = np.zeros(n)
             for k in range(d):
                 sv2 += sv[:, k] * sv[:, k]
-            # -1 = "no codebook covered this row's m"; asserted below so
+            # -1 = "no codebook covered this row's m"; checked below so
             # an uncovered subspace fails loudly instead of emitting an
             # uninitialized code (the Catalyst fold it replaced nulled)
             code_out = np.full(n, -1, dtype=np.int32)
@@ -1326,10 +1352,11 @@ def _pq_assign(
                 d2 = (sv2[mask][:, None] - 2.0 * dot) + c2s[None, :]
                 d2 = np.floor(d2 * 10000.0 + 0.5) / 10000.0
                 code_out[mask] = codes[np.argmin(d2, axis=1)]
-            assert n == 0 or (code_out >= 0).all(), (
-                "subvector m values not covered by the codebook: "
-                f"{sorted(set(m_col[code_out < 0].tolist()))}"
-            )
+            if (code_out < 0).any():
+                raise ValueError(
+                    "subvector m values not covered by the codebook: "
+                    f"{sorted(set(m_col[code_out < 0].tolist()))}"
+                )
             cols = [batch.column(i) for i in range(n_key + 1)]
             cols.append(pa.array(code_out, type=pa.int32()))
             names = [*keys, "m", "code"]

@@ -4,8 +4,6 @@ calls (so every builder call still resolves its own tables)."""
 
 from __future__ import annotations
 
-import uuid
-
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -14,26 +12,12 @@ from pyspark.sql.types import LongType, TimestampType
 from iceberg_twist_spark.catalog import TABLES, load_tables
 
 
-def _jobs(spark, fn):
-    """(fn's result, number of Spark jobs fn ran), counted by job group
-    through the status tracker after the listener bus has drained."""
-    sc = spark.sparkContext
-    group = f"catalog-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_load_tables_reads_on_first_access(spark, sf_dir):
-    tables, n = _jobs(spark, lambda: load_tables(spark, sf_dir))
+def test_load_tables_reads_on_first_access(spark, sf_dir, jobs):
+    tables, n = jobs(lambda: load_tables(spark, sf_dir))
     assert n == 0, f"load_tables ran {n} jobs (expected 0)"
-    li, n = _jobs(spark, lambda: tables["lineitem"])
+    li, n = jobs(lambda: tables["lineitem"])
     assert n == 1, f"first lineitem access ran {n} jobs (expected 1)"
-    again, n = _jobs(spark, lambda: tables["lineitem"])
+    again, n = jobs(lambda: tables["lineitem"])
     assert n == 0 and again is li
 
 

@@ -932,7 +932,7 @@ def test_row_count_serves_from_metadata(spark, tmp_path):
     assert tbl.row_count(s3) == tbl.row_count() == tbl.read().count() == 70
 
 
-def test_append_counts_rows_from_footers(spark, tmp_path):
+def test_append_counts_rows_from_footers(spark, tmp_path, jobs):
     """A commit's n_records comes from the row counts it already reads
     from each new file's parquet footer: it equals read().count() after
     an unpartitioned and a partitioned append, and appending a small
@@ -951,23 +951,9 @@ def test_append_counts_rows_from_footers(spark, tmp_path):
         assert tbl._manifest(sid)["n_records"] == tbl.read().count() == 40
         tables.append(tbl)
 
-    import uuid
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def jobs(fn) -> int:
-        group = f"footer-rows-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(tracker.getJobIdsForGroup(group))
-
-    bare = jobs(lambda: df.write.parquet(str(tmp_path / "bare")))
+    _, bare = jobs(lambda: df.write.parquet(str(tmp_path / "bare")))
     for tbl in tables:
-        assert jobs(lambda t=tbl: t.append(df)) <= bare
+        assert jobs(lambda t=tbl: t.append(df))[1] <= bare
 
 
 def test_apply_deletes_rewrites_only_hit_files(spark, tmp_path):
